@@ -40,10 +40,10 @@ object Bench {
     * the r7 audit watched (pair-emitting dedup, iterative graph,
     * rollup/multi-distinct expansions, the decorrelated scalar
     * subquery, the √n ANN trio) plus the floor-denominated
-    * top-10x-ratio rows. ONE definition: ScaleNProbe replays exactly
-    * this list at 100x, and [[main]] asserts every name resolves in
-    * SparkEntry.queries before sweeping — a renamed query fails the
-    * bench loudly instead of silently vanishing from the evidence.
+    * top-10x-ratio rows. ONE definition: [[main]] asserts every name
+    * resolves in SparkEntry.queries before sweeping — a renamed query
+    * fails the bench loudly instead of silently vanishing from the
+    * evidence.
     */
   val heavy30: Seq[String] = Seq(
     "q17_json_extract", "q23_langid", "q28_near_dups",
@@ -419,9 +419,15 @@ object Bench {
     // core counts (BENCH_r15/BENCH_r15_c8: rc 124, no parseable line,
     // so the round shipped NO bench artifact at all) with the decade
     // levels still running. Decades are now OPT-IN
-    // (SPARK_GRAFT_SCALE10=1); the 1x protocol, readings and JSON
-    // shape are unchanged, so totals stay round-over-round comparable.
-    val scale10 = sys.env.getOrElse("SPARK_GRAFT_SCALE10", "0") == "1"
+    // (SPARK_GRAFT_SCALE10=1 runs both the 10x and the 30x level);
+    // the 1x protocol, readings and JSON shape are unchanged, so
+    // totals stay round-over-round comparable.
+    val scale10 = {
+      val v = sys.env.getOrElse("SPARK_GRAFT_SCALE10", "0")
+      require(v == "0" || v == "1",
+        s"SPARK_GRAFT_SCALE10 must be unset, 0 or 1 (got '$v')")
+      v == "1"
+    }
 
     // ---- official 1x sweep: the ORIGINAL testdata layout — the
     // protocol input every earlier round used and the one the DuckDB
@@ -489,12 +495,9 @@ object Bench {
     // read AGAINST THE 10x ROW (linear ⇒ ~3x; the √n blockers' n^1.5
     // law ⇒ ~5.2x): several 1x rows are floor-bound, so a 30x/1x
     // ratio would measure floors, not growth.
-    // Runs only when the 10x level ran (SPARK_GRAFT_SCALE10=1);
-    // disable separately with SPARK_GRAFT_SCALE30=0.
-    val scale30 = scale10 && results10.nonEmpty &&
-      sys.env.getOrElse("SPARK_GRAFT_SCALE30", "1") != "0"
+    // Runs only when the 10x level ran (SPARK_GRAFT_SCALE10=1).
     val results30: Seq[(String, Double, Seq[Double])] =
-      if (!scale30) Seq.empty
+      if (results10.isEmpty) Seq.empty
       else {
         val bigDir = Scale10x.ensure(spark, sfDir, 30)
         hygiene()

@@ -7,7 +7,7 @@ import graft.sources.ImportSource
 
 /** Builds an N× replica of a testdata scale-factor directory for the
   * bench's scale sweeps (BENCH's `scale10x`/`scale30x` sections) and
-  * ScaleProbe.
+  * the 100x gate's `tools.EnsureReplica`.
   *
   * Fact tables are replicated `factor` times with per-replica key
   * shifts so cardinalities scale WITH the data — 10x orders means 10x

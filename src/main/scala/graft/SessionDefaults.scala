@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The engine's measured session posture, as a library helper — the
-  * knobs every graft harness (Bench/Verify/TimeQuery/probes) ended
+  * knobs every graft harness (Bench/Verify/TimeQuery/EnsureReplica) ended
   * up setting by hand, with the reasoning attached so a production
   * deployment tunes them BY THE SAME RULES rather than copying
   * numbers:

@@ -22,45 +22,23 @@ object TimeQuery {
     spark.sparkContext.setLogLevel("WARN")
     // production posture: graft SQL functions + optimizer rules active
     graft.functions.GraftSparkExtensions.register(spark)
-    // SPARK_GRAFT_STAGES=1: per-stage wall/task-time breakdown after
-    // each run — pinpoints whether a query's cost sits in the (serial,
-    // single-row-group) scan stage or in post-shuffle stages
-    if (sys.env.contains("SPARK_GRAFT_STAGES"))
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val wall = for {
-              s <- i.submissionTime; c <- i.completionTime
-            } yield (c - s) / 1e3
-            val m = i.taskMetrics
-            println(f"  stage ${i.stageId}%3d tasks=${i.numTasks}%3d " +
-              f"wall=${wall.getOrElse(-1.0)}%6.3fs " +
-              f"cpu=${m.executorCpuTime / 1e9}%6.3fs " +
-              f"run=${m.executorRunTime / 1e3}%6.3fs " +
-              f"deser=${m.executorDeserializeTime / 1e3}%6.3fs " +
-              f"gc=${m.jvmGCTime / 1e3}%5.3fs")
-          }
-        })
-    // SPARK_GRAFT_JOBS=1: per-JOB wall clock — the scheduling-floor
+    // per-run job count and summed job wall — the scheduling-floor
     // arithmetic for multi-action queries (trainers): n sequential
     // jobs cannot beat n × the per-job floor however tight each plan
-    if (sys.env.contains("SPARK_GRAFT_JOBS")) {
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            starts.put(j.jobId, j.time)
-          override def onJobEnd(
-              j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val w = Option(starts.remove(j.jobId))
-              .map(s => (j.time - s) / 1e3).getOrElse(-1.0)
-            println(f"  job ${j.jobId}%3d wall=$w%6.3fs")
+    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobWallMs = new java.util.concurrent.atomic.AtomicLong()
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          starts.put(j.jobId, j.time)
+        override def onJobEnd(
+            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+          Option(starts.remove(j.jobId)).foreach { s =>
+            jobs.incrementAndGet(); jobWallMs.addAndGet(j.time - s)
           }
-        })
-    }
+      })
     spark.read.parquet(s"$sfDir/nation.parquet").count() // warmup
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
@@ -75,13 +53,17 @@ object TimeQuery {
         df.explain("formatted")
       }
       (1 to 5).foreach { i =>
+        // listener events post asynchronously: a short pause lets the
+        // previous action's job ends land before the snapshot
+        Thread.sleep(50)
+        val (jobs0, wallMs0) = (jobs.get, jobWallMs.get)
         val t0 = System.nanoTime()
         // the bench's protocol: execute the FULL plan through the noop
         // sink (count() lets the optimizer prune aggregate values and
         // the final sort — readings here must be comparable to
         // BENCH_DETAIL)
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        println(f"$name run$i: ${(System.nanoTime() - t0) / 1e9}%.2fs")
+        val wall = (System.nanoTime() - t0) / 1e9
         // same hygiene as Bench: drop cached plans / checkpoint
         // blocks so runs don't contaminate each other
         spark.catalog.clearCache()
@@ -89,6 +71,8 @@ object TimeQuery {
           .foreach(_.unpersist(blocking = true))
         System.gc()
         Thread.sleep(200)
+        println(f"$name run$i: $wall%.2fs jobs=${jobs.get - jobs0} " +
+          f"job_wall=${(jobWallMs.get - wallMs0) / 1e3}%.2fs")
       }
     }
     spark.stop()

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
+  ShortType}
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -533,7 +535,8 @@ object SimilarityOps {
     // (duckSqrtAssign / duckTwoLevelAssign) carry the identical
     // predicate in their seed CTEs, so both engines pick the same
     // seed prefix even on corpora with degenerate rows.
-    val (rows, n) = seedPrefixAndCount(base, "_id", "_v", maxSeeds)
+    val (rows, n) = seedPrefixAndCount(base, "_id", "_v", maxSeeds,
+      "sqrtSeedCentroids")
     val k = math.min(math.ceil(math.sqrt(n.toDouble)).toLong,
       maxSeeds.toLong).toInt
     if (k == 0) return Seq.empty
@@ -555,10 +558,16 @@ object SimilarityOps {
     * observed metrics re-fire when the plan re-executes a subtree —
     * range-partition SAMPLING double-counted the corpus whenever the
     * optimizer dropped the limit on a small input.) Returns
-    * (ordered candidate vectors, full corpus count).
+    * (ordered candidate vectors, full corpus count). Ids must be
+    * integral: the aggregate's long id cast would turn any other
+    * type into nulls and the caller would fall back to its sentinel
+    * path without a word.
     */
   private def seedPrefixAndCount(base: DataFrame, idCol: String,
-      vecCol: String, maxSeeds: Int): (Seq[Seq[Float]], Long) = {
+      vecCol: String, maxSeeds: Int, op: String): (Seq[Seq[Float]], Long) = {
+    val idType = base.schema(idCol).dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"$op: id column must be an integral type, got ${idType.simpleString}")
     // array<double> embeddings cast per element to float — the same
     // Number.floatValue truncation floatSeq applied on the driver
     val row = base.select(graft.functions.VectorExpressions
@@ -628,8 +637,8 @@ object SimilarityOps {
     * re-derivability discipline, held through both levels).
     *
     * `oversample` is the fine-seed density factor (the 2 above);
-    * TwoLevelProbe sweeps it to measure the skew trade — production
-    * callers keep the measured default.
+    * TwoLevelProbe swept it to measure the skew trade (SCALING round
+    * 10) — production callers keep the measured default.
     *
     * Output: (id, vec, cell) with cell = coarse·2³² + fine.
     */
@@ -736,7 +745,7 @@ object SimilarityOps {
     // identical seed prefix. Count + candidate prefix in ONE job
     // (seedPrefixAndCount, r16) — k1 ≤ maxSeeds, so the k1-prefix of
     // the over-fetched candidates IS the previous limit(k1) collect.
-    val (cands, n) = seedPrefixAndCount(base, "id", "vec", maxSeeds)
+    val (cands, n) = seedPrefixAndCount(base, "id", "vec", maxSeeds, op)
     val t = math.ceil(math.sqrt(n.toDouble)).toLong
     val k1 = math.min(math.ceil(math.sqrt(t.toDouble)).toLong,
       maxSeeds.toLong).toInt

@@ -124,8 +124,8 @@ object FrameStreamPipeline {
     // Per-table inserts run CONCURRENTLY: each table's append is one
     // driver-issued Spark job, and the routed path's cost at N tables
     // is N sequential jobs per flush epoch if issued one at a time —
-    // the fan-out term StreamBench measures (8 tables halved
-    // throughput when serialized). Spark's scheduler interleaves
+    // the fan-out term (8 tables halved throughput when serialized,
+    // SCALING round 5). Spark's scheduler interleaves
     // concurrently-submitted jobs across the executor pool, so
     // submitting them together is the reference's per-table async
     // inserter (pkg/sinks buffered inserters, one per table) on

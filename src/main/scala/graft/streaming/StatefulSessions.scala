@@ -2,11 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode}
 
 /** Stateful streaming sessionization — the custom-state streaming twin
   * of `ChangelogOps.sessionize` (reference semantics: gap rule over
@@ -32,12 +31,6 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   *    watermark passes `last + gap`. This is the shape to extend when
   *    the per-session logic stops being an aggregate (first-touch
   *    attribution, per-session token budgets, ordered funnels).
-  *
-  *  - [[sessionsTws]] — the same contract on Spark 4's
-  *    `transformWithState` arbitrary-state API (typed `ValueState`,
-  *    explicit event-time timers, RocksDB-backed): where new stateful
-  *    operators should be written; the gap-rule fold is shared
-  *    line-for-line with [[sessions]] so the two APIs cannot drift.
   *
   * Scale posture: state is one fixed-width record per ACTIVE key, keyed
   * rows hash-shuffle once onto the state store's partitioning, and
@@ -120,8 +113,7 @@ object StatefulSessions {
 
   /** The session gap rule over one micro-batch's events for a key:
     * close every session the gap rule finishes, return the still-open
-    * tail. Shared verbatim by the `flatMapGroupsWithState` and
-    * `transformWithState` forms so the two APIs cannot drift.
+    * tail.
     */
   private def foldBatch(user: Long, prior: OpenSession,
       evs: Array[SessionEvent], gapUs: Long)
@@ -141,72 +133,6 @@ object StatefulSessions {
       }
     }
     (open, closed.result())
-  }
-
-  /** [[sessions]] re-expressed on Spark 4's `transformWithState`
-    * (the arbitrary-state API that replaces `flatMapGroupsWithState`):
-    * a [[SessionProcessor]] holds one `ValueState[OpenSession]` per
-    * key and ONE event-time timer at the session's close instant —
-    * the timer is deleted and re-registered whenever new events move
-    * the close, so `handleExpiredTimer` fires exactly once per final
-    * session. Same contract as [[sessions]] (late-in-watermark events
-    * merge; beyond-watermark events drop; constant-size state).
-    *
-    * Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`) — which is the
-    * 100 TB posture anyway: per-key state lives off-heap and spills,
-    * the operator's cost stays one shuffle per micro-batch.
-    */
-  def sessionsTws(events: DataFrame, gapSeconds: Long,
-      watermarkDelay: String): Dataset[ClosedSession] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .select(col("user_id").as("user"), col("ts"),
-        unix_micros(col("ts")).as("tsUs"), col("value"))
-      .as[SessionEvent]
-      .groupByKey(_.user)
-      .transformWithState(new SessionProcessor(gapSeconds),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** The per-key state machine behind [[sessionsTws]]. */
-  class SessionProcessor(gapSeconds: Long)
-      extends StatefulProcessor[Long, SessionEvent, ClosedSession] {
-    @transient private var open: ValueState[OpenSession] = _
-    private val gapUs = gapSeconds * 1000000L
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getValueState[OpenSession]("open",
-        Encoders.product[OpenSession], TTLConfig.NONE)
-
-    override def handleInputRows(user: Long, rows: Iterator[SessionEvent],
-        timerValues: TimerValues): Iterator[ClosedSession] = {
-      val evs = rows.toArray.sortBy(_.tsUs)
-      val prior = if (open.exists()) open.get() else null
-      val (tail, closed) = foldBatch(user, prior, evs, gapUs)
-      open.update(tail)
-      // exactly one live timer per key: re-arm at the (possibly moved)
-      // close instant, strictly beyond the current watermark so the
-      // store accepts it
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      val closeMs = tail.lastUs / 1000L + gapSeconds * 1000L
-      getHandle.registerTimer(
-        math.max(closeMs, timerValues.getCurrentWatermarkInMs() + 1L))
-      closed.iterator
-    }
-
-    override def handleExpiredTimer(user: Long, timerValues: TimerValues,
-        expiredTimerInfo: ExpiredTimerInfo): Iterator[ClosedSession] = {
-      // the live timer is always the open session's close: flush it
-      if (!open.exists()) Iterator.empty
-      else {
-        val s = open.get()
-        open.clear()
-        Iterator.single(ClosedSession(user, s.startUs, s.lastUs, s.n, s.sum))
-      }
-    }
   }
 
   /** Declarative twin: built-in `session_window` aggregation with the

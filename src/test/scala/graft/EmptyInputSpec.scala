@@ -143,6 +143,13 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(a.count() == 0)
     assert(graft.ops.SimilarityOps.semDedupTwoLevel(
       emb0, "vec_id", "embedding", threshold = 0.9).count() == 0)
+    // string ids would cast to null seed ids and fall back to the
+    // sentinel path silently: the family refuses them by name
+    val strIds = emb0.withColumn("vec_id", col("vec_id").cast("string"))
+    val e = intercept[IllegalArgumentException](
+      graft.ops.SimilarityOps.twoLevelAssign(strIds, "vec_id", "embedding"))
+    assert(e.getMessage.contains(
+      "twoLevelAssign: id column must be an integral type, got string"))
   }
 
   test("round-11: cellRecall accepts an empty corpus and an empty query sample") {

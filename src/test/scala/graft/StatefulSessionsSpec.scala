@@ -139,24 +139,6 @@ class StatefulSessionsSpec extends AnyFunSuite {
     }
   }
 
-  test("transformWithState sessionization matches batch sessionize across micro-batches") {
-    // TWS requires the RocksDB state store provider — which is the
-    // at-scale posture anyway; scope it to this query and restore
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val got = replay("tws_sessions") { s =>
-        StatefulSessions.sessionsTws(s, gap, "60 seconds").toDF()
-      }.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-      assertMatches(got)
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("session_window streaming aggregation matches batch sessionize across micro-batches") {
     val got = replay("sw_sessions") { s =>
       StatefulSessions.sessionWindowStats(s, gap, "60 seconds")
@@ -169,14 +151,14 @@ class StatefulSessionsSpec extends AnyFunSuite {
     assert(gotKeys == wantKeys)
   }
 
-  /** The late-data scenario, shared by both stateful-API forms. */
-  private def lateDataScenario(name: String,
-      mk: DataFrame => DataFrame): Unit = {
-    val src = Files.createTempDirectory(s"graft-$name").toString
+  test("late-but-in-watermark events merge into the open session; beyond-watermark events drop") {
+    val src = Files.createTempDirectory("graft-late_sessions").toString
     def at(s: String) = java.sql.Timestamp.valueOf(s)
-    val q = mk(spark.readStream.schema(schema).parquet(s"$src/*"))
+    val q = StatefulSessions.sessions(
+        spark.readStream.schema(schema).parquet(s"$src/*"), 600L, "30 minutes")
+      .toDF()
       .writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
+      .format("memory").queryName("late_sessions").start()
     try {
       // batch 1: two events 5 min apart — one open session for user 1
       drop(src, 0, Seq(
@@ -200,7 +182,7 @@ class StatefulSessionsSpec extends AnyFunSuite {
       q.processAllAvailable()
     } finally q.stop()
 
-    val got = spark.table(name).where($"user" >= 0)
+    val got = spark.table("late_sessions").where($"user" >= 0)
       .select($"user", $"startUs", $"endUs", $"n_events", round($"sum_value", 6))
       .as[(Long, Long, Long, Long, Double)].collect().toSet
     def us(s: String) = at(s).getTime * 1000L
@@ -208,63 +190,6 @@ class StatefulSessionsSpec extends AnyFunSuite {
       // user 1: three events (the late one merged, the dropped one not)
       (1L, us("2024-01-01 10:00:00"), us("2024-01-01 10:05:00"), 3L, 7.0),
       (2L, us("2024-01-01 10:40:00"), us("2024-01-01 10:40:00"), 1L, 0.5)))
-  }
-
-  test("late-but-in-watermark events merge into the open session; beyond-watermark events drop") {
-    lateDataScenario("late_sessions",
-      s => StatefulSessions.sessions(s, 600L, "30 minutes").toDF())
-  }
-
-  test("transformWithState: same late-data contract (merge in-watermark, drop beyond)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try lateDataScenario("late_tws",
-      s => StatefulSessions.sessionsTws(s, 600L, "30 minutes").toDF())
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  test("transformWithState sessions survive a query restart from the checkpoint") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val src = Files.createTempDirectory("graft-tws-restart").toString
-      val ck = Files.createTempDirectory("graft-tws-restart-ck").toString
-      val out = Files.createTempDirectory("graft-tws-restart-out").toString
-      val slices = slicesOf(2)
-      def start() = StatefulSessions.sessionsTws(
-          spark.readStream.schema(schema).parquet(s"$src/*"), gap, "60 seconds")
-        .toDF()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ck)
-        .format("parquet").option("path", out).start()
-
-      drop(src, 0, slices(0))
-      val q1 = start()
-      try q1.processAllAvailable() finally q1.stop()
-      val afterRun1 = spark.read.parquet(out).count()
-
-      drop(src, 1, slices(1))
-      drop(src, 2, Seq(Row(-1L, sentinelTs, 0.0)))
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
-
-      val got = spark.read.parquet(out).collect().toSeq
-        .filter(_.getLong(0) >= 0)
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
-      assertMatches(got)
-      assert(afterRun1 > 0, "run 1 closed no sessions — restart not exercised")
-      assert(afterRun1 < got.length, "run 2 emitted nothing — state did not resume")
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 
   test("stateful sessions survive a query restart from the checkpoint") {

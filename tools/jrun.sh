@@ -4,7 +4,7 @@
 # sbt holds the project (e.g. a full `sbt test` in flight).
 # Usage: tools/jrun.sh [-Xmx...] graft.Verify args...
 set -e
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+CP="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
