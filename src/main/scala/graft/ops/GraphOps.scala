@@ -78,11 +78,15 @@ object GraphOps {
     // Stability under memory pressure is the property a fourth-decade
     // run needs; the ~20% best-case penalty is the price (SCALING
     // round 12).
-    // LAZY checkpoints (r16): e and base both materialize inside the
-    // ONE `base.count()` job below — the duplicateClusters discipline
-    // — instead of paying two eager checkpoint jobs AND a count job
-    // (three sequential passes where one suffices; the count reads
-    // the blocks the iterations need anyway).
+    // LAZY checkpoints (r16): the ONE `base.count()` job below writes
+    // the blocks of both e and base — the duplicateClusters
+    // discipline — instead of paying two eager checkpoint jobs AND a
+    // count job (three sequential passes where one suffices). Only
+    // base's checkpoint is finalized (lineage truncated) by that job:
+    // with spark.checkpoint.checkpointAllMarkedAncestors=false (the
+    // default) the checkpoint pass stops at the first marked RDD, so
+    // e's is finalized by the first later job that computes e — the
+    // first iteration below, which reads e's blocks written here.
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct().localCheckpoint(false, storage)
     // node universe + out-degrees in ONE aggregation: each edge

@@ -41,7 +41,9 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
 
   /** One job per flush epoch: the caller's fold is trusted, so the
     * batch streams straight into the append with no cache and no
-    * count/max pre-pass. */
+    * count/max pre-pass. A caller that ships one partition (the
+    * streaming pipeline does) gets one task and one parquet file per
+    * `_date` partition. */
   override def insertCounted(table: TableSchema, batch: DataFrame,
       known: InsertResult): InsertResult = {
     write(table, batch)

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Observability for streaming CDC queries — the Spark-native home
@@ -8,7 +9,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * histograms (reference: pkg/subscription/stream.go:68-76 message
   * counters, pkg/imports/importer.go:57-81 rows/durations).
   * Attach with `spark.streams.addListener(listener)`; progress
-  * arrives per micro-batch = per flush epoch.
+  * arrives per micro-batch = per flush epoch. `lastDurationsMs` keeps
+  * the last progress's whole phase breakdown (`triggerExecution`,
+  * `addBatch`, `latestOffset`, `walCommit`, ...), Structured
+  * Streaming's own per-epoch attribution.
   */
 final class CdcQueryListener extends StreamingQueryListener {
 
@@ -17,6 +21,7 @@ final class CdcQueryListener extends StreamingQueryListener {
       rows: Long = 0,
       lastBatchRows: Long = 0,
       lastDurationMs: Long = 0,
+      lastDurationsMs: Map[String, Long] = Map.empty,
       lastRowsPerSecond: Double = 0.0)
 
   private val stats = new ConcurrentHashMap[String, QueryStats]()
@@ -31,15 +36,16 @@ final class CdcQueryListener extends StreamingQueryListener {
       event: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = event.progress
     val name = Option(p.name).getOrElse(p.id.toString)
-    val duration = Option(p.durationMs.get("triggerExecution"))
-      .map(_.longValue).getOrElse(0L)
+    val durations = p.durationMs.asScala.map { case (k, v) =>
+      k -> v.longValue }.toMap
     stats.compute(name, (_, prev0) => {
       val prev = if (prev0 == null) QueryStats() else prev0
       QueryStats(
         batches = prev.batches + 1,
         rows = prev.rows + p.numInputRows,
         lastBatchRows = p.numInputRows,
-        lastDurationMs = duration,
+        lastDurationMs = durations.getOrElse("triggerExecution", 0L),
+        lastDurationsMs = durations,
         lastRowsPerSecond = p.processedRowsPerSecond)
     })
   }

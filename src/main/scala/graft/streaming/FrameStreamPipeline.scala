@@ -27,8 +27,10 @@ object FrameStreamPipeline {
     * (8 daemon threads, idle-reclaimed) serves every pipeline without
     * per-epoch executor churn — a 1-second trigger would otherwise
     * create and tear down a pool every epoch, forever. The cap bounds
-    * driver-side row-conversion concurrency; Spark job SUBMISSION is
-    * cheap and the jobs themselves share the executor pool. */
+    * driver-side row-conversion concurrency and the number of jobs in
+    * flight; each job is one task (every table's epoch batch is one
+    * partition, see processBatch), so at most 8 write tasks compete
+    * for the executor pool per epoch. */
   private lazy val insertEc: scala.concurrent.ExecutionContext = {
     val tf = new java.util.concurrent.ThreadFactory {
       private val n = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -129,9 +131,10 @@ object FrameStreamPipeline {
     // concurrently-submitted jobs across the executor pool, so
     // submitting them together is the reference's per-table async
     // inserter (pkg/sinks buffered inserters, one per table) on
-    // Spark's clock. Bounded pool: table count capped at 8 threads —
-    // job SUBMISSION is cheap, the cap only bounds driver-side row
-    // conversion concurrency. Ordering is untouched: rows within a
+    // Spark's clock. Bounded pool: table count capped at 8 threads,
+    // which bounds driver-side row conversion and the jobs in flight;
+    // each job is a single write task (one partition per table, see
+    // the LocalRelation below). Ordering is untouched: rows within a
     // table stay one append; cross-table ordering is carried by
     // (timestamp, lsn, sequence) in the data, not by call order; the
     // epoch's ack still waits for EVERY insert (Await below), so a
@@ -176,10 +179,18 @@ object FrameStreamPipeline {
             // LocalRelation, not parallelize(rows): the local form
             // converts to compact UnsafeRows ONCE on the driver and
             // ships binary; parallelize Java-serializes every nested
-            // Row into the task closures on each use
+            // Row into the task closures on each use. ONE partition:
+            // a LocalRelation scans as min(rows, defaultParallelism)
+            // partitions, i.e. one write task and one parquet file per
+            // core, each paying task deserialization and a file commit
+            // on the ack's blocking path. The driver holds every row
+            // and admission (maxFramesPerTrigger) bounds the epoch, so
+            // one task gives up no useful parallelism; the import path
+            // keeps its parallel write.
             val df = spark.createDataFrame(
               scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
               Envelope.schemaFor(payloadType, withToastMarker = true))
+              .coalesce(1)
             // the fold is already known on the driver (we hold the
             // rows): pass it down so the sink skips the count/max job
             val known = InsertResult(ms.size.toLong,

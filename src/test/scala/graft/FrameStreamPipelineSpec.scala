@@ -99,6 +99,46 @@ class FrameStreamPipelineSpec extends AnyFunSuite {
     assert(wm.position.contains(300L))
   }
 
+  test("each table's flush-epoch batch lands as one parquet file") {
+    val frameDir = tmp(); val ckpt = tmp(); val wh = tmp()
+    val sink = new WarehouseSink(spark, wh)
+    val wm = new CdcPipeline.AckWatermark
+    val rel2 = Relation(2L, "public", "owners", 'd'.toByte, Seq(
+      RelationColumn(key = true, "id", PgTypes.Int8, -1),
+      RelationColumn(key = false, "email", PgTypes.Varchar, -1)))
+    // one transaction, one epoch, 12 rows per table: more rows than
+    // the session's 4 cores, so a batch split per core would write
+    // 4 files per table
+    val ids = 1L to 12L
+    PgOutputFrameLog.append(frameDir, "seg-000",
+      Seq(encodeBegin(Begin(400L, 0L, 4L)),
+        encodeRelation(rel), encodeRelation(rel2)) ++
+        ids.map(i => ins(i, s"pet$i")) ++
+        ids.map(i => encodeInsert(Insert(2L,
+          TupleData(Seq(cell(i.toString), cell(s"o$i@b.c")))))) ++
+        Seq(encodeCommit(Commit(0, 400L, 401L, 0L))))
+    val q = FrameStreamPipeline.start(spark, frameDir, sink, wm, ckpt, "1 seconds")
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+
+    val pets = graft.model.TableSchema(1L, "public", "pets", Seq(
+      graft.model.ColumnSpec("id", PgTypes.Int8, key = true),
+      graft.model.ColumnSpec("name", PgTypes.Text)))
+    val owners = graft.model.TableSchema(2L, "public", "owners", Seq(
+      graft.model.ColumnSpec("id", PgTypes.Int8, key = true),
+      graft.model.ColumnSpec("email", PgTypes.Varchar)))
+    for (table <- Seq(pets, owners)) {
+      val dates = new java.io.File(sink.rawPath(table)).listFiles()
+        .filter(_.getName.startsWith("_date=")).toSeq
+      assert(dates.size == 1, s"${table.ref.qualified}: $dates")
+      val parts = dates.head.listFiles().map(_.getName)
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq
+      assert(parts.size == 1, s"${table.ref.qualified}: $parts")
+      assert(sink.latestView(table).count() == ids.size)
+    }
+    assert(wm.position.contains(400L))
+  }
+
   test("retainLog drops segments behind the read position as epochs advance") {
     val frameDir = tmp(); val ckpt = tmp(); val wh = tmp()
     val sink = new WarehouseSink(spark, wh)

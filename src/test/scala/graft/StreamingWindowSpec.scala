@@ -285,6 +285,11 @@ class StreamingWindowSpec extends AnyFunSuite {
       }
       assert(stats.exists(_.rows == 3), s"got $stats")
       assert(stats.exists(_.batches >= 1))
+      // the whole phase breakdown of the last progress is kept
+      val phases = stats.get.lastDurationsMs
+      assert(Set("triggerExecution", "addBatch").subsetOf(phases.keySet),
+        s"got $phases")
+      assert(stats.get.lastDurationMs == phases("triggerExecution"))
     } finally spark.streams.removeListener(listener)
   }
 
