@@ -5,7 +5,7 @@ import org.apache.spark.sql.types._
 
 import graft.model._
 import graft.sinks.WarehouseSink
-import graft.sources.{ChangelogBuilder, ImportSource, PgOutput, PgOutputFrameLog}
+import graft.sources.{ImportSource, PgOutput, PgOutputFrameLog}
 import graft.streaming.CdcPipeline
 
 /** End-to-end demo of the full CDC path on real test data:
@@ -63,34 +63,6 @@ object Example {
     Thread.sleep(500) // listener events are async
     println(s"query stats: ${listener.statsOf(s"cdc-frames($frameDir)")}")
 
-    // 2a. the decoded frame stream through the full DSv2 epoch sink:
-    // staged part files, manifest commits, ack watermark read-back
-    val epochOut = s"$out/epochsink"
-    val epochQuery = spark.readStream
-      .format(classOf[graft.sources.PgOutputFrameSource].getName)
-      .option("path", frameDir)
-      .load()
-      .selectExpr("position AS lsn", "base64(frame) AS frame_b64")
-      .writeStream
-      .format(classOf[graft.sinks.EpochFileSink].getName)
-      .option("path", epochOut)
-      .option("checkpointLocation", s"$out/epochckpt")
-      .start()
-    try epochQuery.processAllAvailable() finally epochQuery.stop()
-    val wm = graft.sinks.EpochFileSink.committedWatermark(
-      epochOut, spark.sparkContext.hadoopConfiguration)
-    println(s"epoch sink watermark (epoch, lsn): $wm")
-
-    // 2b. the same frame log through the DISTRIBUTED decode pipeline
-    // (control frames on the driver, row frames in executors) into the
-    // generic text-map plane
-    val ddWatermark = new graft.streaming.CdcPipeline.AckWatermark
-    val ddQuery = graft.streaming.DistributedDecode.start(
-      spark, frameDir, s"$out/ddplane", ddWatermark, s"$out/ddckpt", "1 seconds")
-    try ddQuery.processAllAvailable() finally ddQuery.stop()
-    val ddRows = graft.streaming.GenericPlane.raw(spark, s"$out/ddplane").count()
-    println(s"distributed decode: $ddRows generic rows, ack ${ddWatermark.position}")
-
     // 3. the latest-row view: merge-on-read current state
     sink.registerViews(table)
     spark.sql("SELECT r_regionkey, r_name FROM region ORDER BY r_regionkey").show()
@@ -102,19 +74,6 @@ object Example {
     val asOfImport = sink.asOf(table,
       java.sql.Timestamp.valueOf("2024-06-15 00:00:00")).count()
     println(s"compacted view rows: $compacted, as-of pre-stream rows: $asOfImport")
-
-    // 3b. the same wire frames through the generic (MapType) plane:
-    // one plan for any number of tables, typed projection at read
-    val entries = ChangelogBuilder.build(wire.iterator.map(decode)).toVector
-    val mods = entries.collect { case m: ChangelogBuilder.ModificationEntry => m }
-    val generic = graft.streaming.GenericPlane.toGeneric(spark, mods)
-    graft.streaming.GenericPlane.append(generic, s"$out/generic")
-    val typedBack = graft.streaming.GenericPlane.latestRows(spark, s"$out/generic",
-      "public", "region", Seq("r_regionkey"),
-      Map("r_regionkey" -> org.apache.spark.sql.types.IntegerType,
-        "r_name" -> org.apache.spark.sql.types.StringType))
-    println("generic plane latest rows: " + typedBack.select("r_regionkey", "r_name")
-      .collect().map(r => s"${r.get(0)}=${r.get(1)}").mkString(","))
 
     // 4. similarity search over embeddings: exact vs SRP-LSH vs IVF
     import graft.ops.SimilarityOps

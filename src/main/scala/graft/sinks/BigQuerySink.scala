@@ -3,7 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.model.{Envelope, TableSchema}
+import graft.model.{Envelope, Operation, TableSchema}
 import BigQueryMapping.BqTableMeta
 
 /** The network seam of the BigQuery connector. Everything above it
@@ -99,6 +99,6 @@ final class BigQuerySink(dataset: String, transport: BigQueryTransport)
     transport.insertRows(s"${table.name}_raw", Iterator(
       s"""{"timestamp":"$iso","lsn":${lsn.getOrElse("null")},""" +
         s""""sequence":${sequence.getOrElse("null")},""" +
-        s""""operation":"TRUNCATE","payload":null}"""))
+        s""""operation":"${Operation.Truncate}","payload":null}"""))
   }
 }

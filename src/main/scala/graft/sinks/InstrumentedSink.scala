@@ -31,20 +31,16 @@ final class InstrumentedSink(inner: Sink) extends Sink {
     outcome
   }
 
-  override def insert(table: TableSchema, batch: DataFrame): InsertResult = {
-    val t0 = System.nanoTime()
-    val result = inner.insert(table, batch)
-    insertNanos.add(System.nanoTime() - t0)
-    insertCount.increment()
-    rowCount.add(result.count)
-    maxBatchSize.getAndUpdate(m => math.max(m, result.count))
-    result
-  }
+  override def insert(table: TableSchema, batch: DataFrame): InsertResult =
+    timed(inner.insert(table, batch))
 
   override def insertCounted(table: TableSchema, batch: DataFrame,
-      known: InsertResult): InsertResult = {
+      known: InsertResult): InsertResult =
+    timed(inner.insertCounted(table, batch, known))
+
+  private def timed(body: => InsertResult): InsertResult = {
     val t0 = System.nanoTime()
-    val result = inner.insertCounted(table, batch, known)
+    val result = body
     insertNanos.add(System.nanoTime() - t0)
     insertCount.increment()
     rowCount.add(result.count)

@@ -28,8 +28,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *   StandbyStatusUpdate.
   * - a single input partition per batch: the frame stream is ordered
   *   and the downstream ChangelogBuilder relies on Relation messages
-  *   preceding their rows. Parallelism starts after decode, on the
-  *   envelope DataFrame (see SCALING.md "Streaming decode").
+  *   preceding their rows. Decode stays on the driver; the parallel
+  *   step after it is one insert job per table per flush epoch.
   *
   * Usage:
   * {{{

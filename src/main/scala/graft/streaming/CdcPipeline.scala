@@ -2,20 +2,20 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.model.{Envelope, TableSchema}
-import graft.ops.ChangelogOps
+import graft.model.TableSchema
 import graft.sinks.{InsertResult, Sink}
 
-/** The streaming consume loop: envelope micro-batches → sequencing →
-  * sink insert → ack watermark confirm.
+/** The consume contract shared by every CDC path: the monotonic ack
+  * watermark, and the batch consume that imports and replays use.
   *
-  * Maps the reference's sink.Consume wiring (reference:
+  * The live stream runs through [[FrameStreamPipeline]]: one routed
+  * streaming query decodes frames, inserts each table's rows through
+  * the [[Sink]], and confirms the epoch's max LSN here. That maps the
+  * reference's sink.Consume wiring (reference:
   * pkg/sinks/generic/sink.go:81-122 consume loop + flush ticker;
   * cmd/pgsink/cmd/app.go:340-346 ack hookup) onto Structured
   * Streaming: the trigger interval IS the flush epoch, foreachBatch
-  * completion IS the flush barrier, and the checkpoint plus our
+  * completion IS the flush barrier, and the checkpoint plus the
   * monotonic confirm callback IS `stream.Confirm(lsn)`.
   */
 object CdcPipeline {
@@ -33,36 +33,8 @@ object CdcPipeline {
     def position: Option[Long] = Option(current.get()).filter(_ >= 0)
   }
 
-  /** Start one per-table streaming query — plan-per-table mirrors the
-    * reference's one-inserter-per-route design
-    * (pkg/sinks/generic/router.go:30-41).
-    *
-    * @param envelopes streaming DataFrame in envelope layout
-    * @param flushInterval the reference's default is 5s
-    *                      (pkg/sinks/file/sink.go:30)
-    */
-  def start(
-      envelopes: DataFrame,
-      table: TableSchema,
-      sink: Sink,
-      watermark: AckWatermark,
-      checkpoint: String,
-      flushInterval: String = "5 seconds"): StreamingQuery = {
-    sink.handleSchema(table)
-    envelopes.writeStream
-      .queryName(s"cdc-${table.ref.qualified}")
-      .trigger(Trigger.ProcessingTime(flushInterval))
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val result = sink.insert(table, batch)
-        result.lsn.foreach(watermark.confirm)
-        ()
-      }
-      .start()
-  }
-
-  /** Batch-mode consume for tests and replays: same dispatch, no
-    * trigger. Returns the fold of all insert results. */
+  /** Batch-mode consume for imports and replays: schema DDL, one
+    * insert, then confirm. Returns the insert's (count, max LSN) fold. */
   def consumeBatch(
       envelopes: DataFrame,
       table: TableSchema,

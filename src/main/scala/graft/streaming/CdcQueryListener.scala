@@ -20,7 +20,6 @@ final class CdcQueryListener extends StreamingQueryListener {
       batches: Long = 0,
       rows: Long = 0,
       lastBatchRows: Long = 0,
-      lastDurationMs: Long = 0,
       lastDurationsMs: Map[String, Long] = Map.empty,
       lastRowsPerSecond: Double = 0.0)
 
@@ -44,7 +43,6 @@ final class CdcQueryListener extends StreamingQueryListener {
         batches = prev.batches + 1,
         rows = prev.rows + p.numInputRows,
         lastBatchRows = p.numInputRows,
-        lastDurationMs = durations.getOrElse("triggerExecution", 0L),
         lastDurationsMs = durations,
         lastRowsPerSecond = p.processedRowsPerSecond)
     })

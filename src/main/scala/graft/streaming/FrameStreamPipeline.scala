@@ -9,10 +9,10 @@ import graft.sources.{ChangelogBuilder, PgOutput}
 
 /** The complete streaming CDC lifecycle (SURVEY §3.1) on Spark:
   * frame source → ordered decode → route per table → sink insert →
-  * ack. One streaming query; the driver-side decode is the ordered,
-  * stateful stage (relation cache + transaction framing live across
-  * micro-batches in a [[ChangelogBuilder]]); everything from the
-  * envelope DataFrame on is distributed.
+  * ack. One streaming query routes every table; the ordered, stateful
+  * stage is the driver-side decode (relation cache + transaction
+  * framing live across micro-batches in a [[ChangelogBuilder]]); each
+  * table's epoch batch is one driver-built partition, one insert job.
   *
   * This mirrors the reference's thread chain — receive loop,
   * Sequence, BuildChangelog, router, sink (cmd/pgsink/cmd/app.go:

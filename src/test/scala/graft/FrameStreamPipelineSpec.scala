@@ -139,6 +139,33 @@ class FrameStreamPipelineSpec extends AnyFunSuite {
     assert(wm.position.contains(400L))
   }
 
+  test("a truncate-only transaction still advances the ack watermark") {
+    val frameDir = tmp(); val ckpt = tmp(); val wh = tmp()
+    val sink = new WarehouseSink(spark, wh)
+    val wm = new CdcPipeline.AckWatermark
+    // txn 1 (5 frames) inserts two pets; txn 2 (3 frames) carries no
+    // row frame but the 'T'. maxFramesPerTrigger=5 puts each in its
+    // own epoch, so epoch 2 has no insert whose LSN could be acked
+    PgOutputFrameLog.append(frameDir, "seg-000",
+      Seq(encodeBegin(Begin(100L, 0L, 1L)), encodeRelation(rel),
+        ins(1L, "rex"), ins(2L, "whiskers"),
+        encodeCommit(Commit(0, 100L, 101L, 0L)),
+        encodeBegin(Begin(200L, 0L, 2L)),
+        encodeTruncate(Truncate(0, Seq(1L))),
+        encodeCommit(Commit(0, 200L, 201L, 0L))))
+    val q = FrameStreamPipeline.start(spark, frameDir, sink, wm, ckpt,
+      "1 seconds", maxFramesPerTrigger = Some(5L))
+    try q.processAllAvailable() finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    assert(wm.position.contains(200L))
+
+    val pets = graft.model.TableSchema(1L, "public", "pets", Seq(
+      graft.model.ColumnSpec("id", PgTypes.Int8, key = true),
+      graft.model.ColumnSpec("name", PgTypes.Text)))
+    assert(sink.latestView(pets).count() == 0)
+    assert(sink.raw(pets).select("after.id").as[Long].collect().toSet == Set(1L, 2L))
+  }
+
   test("retainLog drops segments behind the read position as epochs advance") {
     val frameDir = tmp(); val ckpt = tmp(); val wh = tmp()
     val sink = new WarehouseSink(spark, wh)

@@ -113,31 +113,6 @@ class SinkSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](wm.confirm(5L))
   }
 
-  test("streaming query: envelope micro-batches flow through the sink to the view") {
-    val root = tmp()
-    val sink = new WarehouseSink(spark, root)
-    val wm = new CdcPipeline.AckWatermark
-    // drive a real Structured Streaming query from a file source
-    val srcDir = tmp()
-    val payload = StructType(Seq(
-      StructField("id", LongType), StructField("msg", StringType)))
-    val schema = Envelope.schemaFor(payload)
-    envelopes(
-      ("2024-01-01 00:00:00", Some(1L), Some(1L), "INSERT", 1L, "a"),
-      ("2024-01-01 00:00:01", Some(2L), Some(1L), "UPDATE", 1L, "b"))
-      .write.json(srcDir + "/batch1")
-    val stream = spark.readStream.schema(schema).json(srcDir + "/*")
-    val q = CdcPipeline.start(stream, oneSchema, sink, wm, tmp(),
-      flushInterval = "1 seconds")
-    try {
-      q.processAllAvailable()
-    } finally q.stop()
-    val latest = sink.latestView(oneSchema)
-      .select("id", "msg").as[(Long, String)].collect().toMap
-    assert(latest == Map(1L -> "b"))
-    assert(wm.position.contains(2L))
-  }
-
   test("import jobs: reconcile-once, backoff eligibility, acquire preference, completion") {
     import graft.jobs._
     val store = new ImportJobStore

@@ -289,7 +289,6 @@ class StreamingWindowSpec extends AnyFunSuite {
       val phases = stats.get.lastDurationsMs
       assert(Set("triggerExecution", "addBatch").subsetOf(phases.keySet),
         s"got $phases")
-      assert(stats.get.lastDurationMs == phases("triggerExecution"))
     } finally spark.streams.removeListener(listener)
   }
 

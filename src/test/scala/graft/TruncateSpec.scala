@@ -6,14 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.model.PgTypes
 import graft.sinks.WarehouseSink
 import graft.sources._
-import graft.streaming.{CdcPipeline, DistributedDecode, FrameStreamPipeline, GenericPlane}
+import graft.streaming.{CdcPipeline, FrameStreamPipeline}
 
 /** pgoutput 'T' (truncate) end to end — a message the reference
   * LISTS but errors on (pkg/logical/decoder.go); here it decodes and
   * applies: latest views drop rows at or before the truncate
-  * position, the append-only raw history and time travel keep the
-  * pre-truncate state, and the distributed plane carries the marker
-  * in-band as a TRUNCATE envelope.
+  * position, and the append-only raw history and time travel keep
+  * the pre-truncate state.
   */
 class TruncateSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -141,30 +140,5 @@ class TruncateSpec extends AnyFunSuite {
     assert(lines.get(0).contains(""""name":"pets""""))
     assert(lines.get(0).contains(""""lsn":42"""))
     assert(lines.get(0).contains(""""sequence":7"""))
-  }
-
-  test("distributed plane: in-band TRUNCATE envelope, latestRows applies it") {
-    val frameDir = tmp(); val ckpt = tmp(); val plane = tmp()
-    PgOutputFrameLog.append(frameDir, "seg-000", Seq(
-      encodeBegin(Begin(100L, 1000000000L, 1L)), encodeRelation(rel),
-      ins(1L, "rex"), ins(2L, "whiskers"),
-      encodeCommit(Commit(0, 100L, 101L, 1000000000L)),
-      encodeBegin(Begin(200L, 2000000000L, 2L)),
-      encodeTruncate(Truncate(0, Seq(1L))),
-      ins(3L, "phoenix"),
-      encodeCommit(Commit(0, 200L, 201L, 2000000000L))))
-    val wm = new CdcPipeline.AckWatermark
-    val q = DistributedDecode.start(spark, frameDir, plane, wm, ckpt, "1 seconds")
-    try q.processAllAvailable() finally q.stop()
-    // the marker row is in the raw plane with both images null
-    val rawRows = GenericPlane.raw(spark, plane)
-      .where($"name" === "pets")
-    assert(rawRows.where($"operation" === "TRUNCATE").count() == 1)
-    // latest state: only the post-truncate insert
-    val latest = GenericPlane.latestRows(spark, plane, "public", "pets",
-        Seq("id"), Map("id" -> org.apache.spark.sql.types.LongType))
-      .select("id").as[Long].collect().toSet
-    assert(latest == Set(3L))
-    assert(wm.position.contains(200L))
   }
 }
