@@ -70,7 +70,7 @@ object Example {
 
     // 3a. compaction + time travel: same state, bounded read
     sink.compact(table)
-    val compacted = sink.latestViewCompacted(table).count()
+    val compacted = sink.latestView(table).count()
     val asOfImport = sink.asOf(table,
       java.sql.Timestamp.valueOf("2024-06-15 00:00:00")).count()
     println(s"compacted view rows: $compacted, as-of pre-stream rows: $asOfImport")

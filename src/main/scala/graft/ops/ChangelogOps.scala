@@ -185,14 +185,6 @@ object ChangelogOps {
     base.join(touched, keys, "left_anti").unionByName(additions)
   }
 
-  /** Route-by-table partitioning: the Router's exchange
-    * (reference: pkg/sinks/generic/router.go:82-99). In Spark this is
-    * a hash repartition on the qualified table name so each output
-    * task writes one table's rows contiguously.
-    */
-  def routeByTable(df: DataFrame, namespaceCol: Column, nameCol: Column): DataFrame =
-    df.repartition(concat_ws(".", namespaceCol, nameCol))
-
   /** Exponential retry backoff, capped:
     * `LEAST(max, base * exp^errorCount)` in seconds
     * (reference: pkg/imports/worker.go:140-161 computes

@@ -246,28 +246,16 @@ object DedupOps {
     * partition, and after N batches a probe opens N files per band.
     * Rows are immutable (signatures of accepted docs — no
     * latest-wins to resolve), so compaction is a pure rewrite:
-    * read, repartition by band, two-rename swap with a recovery
-    * window identical to the ANN stores'.
+    * read, repartition by band, and the ANN stores' two-rename swap
+    * ([[SimilarityOps.rewriteStore]]) with its crash recovery.
     */
   def compactLshStore(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val tmpDir = path + ".compact-tmp"
-    val oldDir = path + ".compact-old"
-    spark.read.parquet(path)
-      .repartition(col("band"))
-      .write.partitionBy("band").mode("overwrite").parquet(tmpDir)
-    val fs = new java.io.File(path)
-    val old = new java.io.File(oldDir)
-    if (old.exists()) sys.error(s"unfinished compaction at $oldDir")
-    require(fs.renameTo(old), s"swap-out failed for $path")
-    require(new java.io.File(tmpDir).renameTo(fs),
-      s"swap-in failed for $path (recover: move $oldDir back)")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
+      path: String): Unit =
+    SimilarityOps.rewriteStore(spark, path) { staging =>
+      spark.read.parquet(path)
+        .repartition(col("band"))
+        .write.partitionBy("band").mode("overwrite").parquet(staging)
     }
-    rm(old)
-  }
 
   /** Probe the store with new documents: (new_id, store_id,
     * est_jaccard) for every stored near-dup at or above

@@ -1489,8 +1489,17 @@ object SimilarityOps {
     // probe_cells=[-1]), so the prefix fusion's single posexplode
     // aggregation replaces probePairCost's two aggregations + join —
     // same Σ probers·owners, term for term (probePairCostPrefix doc).
+    // A caller-built frame may break that contract (null, empty or
+    // mismatched probe_cells): such a row still joins as an owner but
+    // is not counted, so the same collect counts them and fails.
+    val broken = assigned.agg(count(when(
+      !(get(col("probe_cells"), lit(0)) <=> col("cell")), lit(1))).as("_broken"))
     val est = probePairCostPrefix(assigned, "cell", "probe_cells",
-      Seq(Int.MaxValue)).collect()(0)
+      Seq(Int.MaxValue)).crossJoin(broken).collect()(0)
+    require(est.getLong(3) == 0L,
+      s"$op: ${est.getLong(3)} rows break the probe contract " +
+        "probe_cells[0] == cell (null, empty or mismatched probe_cells), " +
+        "so the pair budget cannot be estimated")
     val pairs = if (est.isNullAt(2)) BigDecimal(0)
       else BigDecimal(est.getDecimal(2))
     require(pairs <= BigDecimal(maxPairs),
@@ -1787,12 +1796,7 @@ object SimilarityOps {
     * sink's compaction. The surviving generation number is
     * preserved so appends made after a compaction still win.
     *
-    * Rewrites through a sibling staging directory then swaps in
-    * two renames (old aside, staging in): no byte of the store is
-    * deleted before its replacement is complete, so every crash
-    * window leaves a full copy on disk — the live store, or (for a
-    * crash between the renames) the `_prev` + staging pair, which
-    * the next compaction run sweeps.
+    * Rewrites through [[rewriteStore]]'s two-rename swap.
     */
   def compactIvfPartitioned(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String, vecCol: String,
@@ -1809,7 +1813,34 @@ object SimilarityOps {
 
   private def compactStore(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String, vecCol: String,
-      part: Column => Column, partCol: String): Unit = {
+      part: Column => Column, partCol: String): Unit =
+    rewriteStore(spark, path) { staging =>
+      spark.read.parquet(path)
+        .groupBy(col(idCol))
+        .agg(max_by(struct(col(vecCol), col("_gen")), col("_gen")).as("_v"))
+        .select(col(idCol), col("_v")(vecCol).as(vecCol),
+          col("_v")("_gen").as("_gen"))
+        .withColumn(partCol, part(col(vecCol)))
+        .write.partitionBy(partCol).mode("overwrite").parquet(staging)
+    }
+
+  /** The append-only stores' compaction swap (ANN stores here, the
+    * LSH store in [[DedupOps.compactLshStore]]): `write` fills the
+    * sibling staging directory `<path>_compacting` from the store,
+    * then two renames swap it in (old aside to `<path>_prev`,
+    * staging in) and the old copy is deleted. No byte of the store
+    * is deleted before its replacement is complete, so every crash
+    * window leaves a full copy on disk — the live store, or (for a
+    * crash between the renames) the `_prev` + staging pair, which the
+    * next run sweeps. Hadoop FileSystem API, so any supported
+    * filesystem works.
+    *
+    * The warehouse sink publishes its baselines differently (one new
+    * generation directory per compaction, older ones deleted after):
+    * its reader must never see "no baseline" after a vacuum, which
+    * the window between these two renames would show. */
+  private[ops] def rewriteStore(spark: org.apache.spark.sql.SparkSession,
+      path: String)(write: String => Unit): Unit = {
     val staging = path + "_compacting"
     val prev = path + "_prev"
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -1823,13 +1854,7 @@ object SimilarityOps {
       else fs.delete(p(prev), true)
     }
     fs.delete(p(staging), true)
-    spark.read.parquet(path)
-      .groupBy(col(idCol))
-      .agg(max_by(struct(col(vecCol), col("_gen")), col("_gen")).as("_v"))
-      .select(col(idCol), col("_v")(vecCol).as(vecCol),
-        col("_v")("_gen").as("_gen"))
-      .withColumn(partCol, part(col(vecCol)))
-      .write.partitionBy(partCol).mode("overwrite").parquet(staging)
+    write(staging)
     if (!fs.rename(p(path), p(prev)))
       throw new IllegalStateException(
         s"compaction could not move $path aside; store untouched")

@@ -29,8 +29,4 @@ final class SchemaHandler(apply: TableSchema => Unit) {
       }
     }
   }
-
-  /** Known fingerprint for a table, if any schema was handled. */
-  def fingerprintOf(table: String): Option[String] =
-    Option(fingerprints.get(table))
 }

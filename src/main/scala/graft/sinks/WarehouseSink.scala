@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{Envelope, TableSchema}
@@ -104,9 +105,8 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
       upTo: Option[java.sql.Timestamp] = None,
       past: Option[(Long, java.sql.Timestamp)] = None)
       : Option[(java.sql.Timestamp, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(truncatePath(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
+    val p = new Path(truncatePath(table))
+    if (!fsOf(p).exists(p)) return None
     var df = spark.read.parquet(truncatePath(table))
     upTo.foreach(ts => df = df.where(col("timestamp") <= lit(ts)))
     past.foreach { case (wmLsn, wmTs) =>
@@ -141,13 +141,11 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
     * (reference: pkg/sinks/bigquery/schema_builders.go:146-161).
     * Unchanged-TOAST cells merge from the previous image when the
     * marker column is present (ChangelogOps.latestRowsMerged).
-    * Compaction-aware: with a baseline it reads baseline + tail
-    * (equivalence to the full window is spec-verified), which is also
-    * what keeps this view CORRECT after [[vacuum]] drops raw
+    * With a compacted baseline it reads baseline + tail, which is
+    * also what keeps it CORRECT after [[vacuum]] drops raw
     * partitions the baseline already covers; without one it windows
     * the full history. */
-  def latestView(table: TableSchema): DataFrame =
-    latestViewCompacted(table)
+  def latestView(table: TableSchema): DataFrame = state(table, None)
 
   /** Register both as SQL-queryable views, like the reference's
     * `CREATE VIEW <name>` DDL. */
@@ -175,193 +173,46 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
   /** Time travel: table state as of an instant — the reason the
     * reference time-partitions its raw table ("drop old data …
     * time-travelling", schema_builders.go:103-106). The `_date`
-    * partition filter prunes before the window runs.
-    */
+    * partition filter prunes before the window runs. Instants before
+    * the compaction watermark of a vacuumed table fail loudly:
+    * deleted history must never look like an answer. */
   def asOf(table: TableSchema, ts: java.sql.Timestamp): DataFrame =
-    if (!vacuumed(table))
-      // full history intact: window the raw rows at or before ts
-      ChangelogOps.latestRowsMerged(
-        afterTruncate(
-          raw(table)
-            .where(col("_date") <= to_date(lit(ts)) &&
-              col(Envelope.TimestampCol) <= lit(ts)),
-          truncateMarker(table, upTo = Some(ts))),
-        table.primaryKeys)
-    else {
-      // vacuumed history: states before the compaction watermark are
-      // not reconstructible (a key's last pre-ts row may be in a
-      // dropped partition, and the baseline holds NEWER state). Fail
-      // loudly — deleted data must never look like an answer — and
-      // serve at-or-past-watermark instants from baseline + tail.
-      val (wmLsn, wmTs) = compactionWatermark(table).get
-      require(!ts.before(wmTs),
-        s"asOf($ts) predates the compaction watermark $wmTs of a " +
-          s"vacuumed table (horizon ${retentionHorizon(table)}): that " +
-          "history was dropped by retention")
-      compactedStateRead(table, wmLsn, wmTs, Some(ts))
-    }
+    state(table, Some(ts))
 
-  private def vacuumed(table: TableSchema): Boolean =
-    retentionHorizon(table) != java.sql.Date.valueOf("1970-01-01")
-
-  // ---- compaction: bound the window's read amplification ----
-
-  private def compactedPath(table: TableSchema) =
-    s"$root/compacted/${table.ref.qualified}"
-  private def watermarkPath(table: TableSchema) =
-    s"$root/compacted/${table.ref.qualified}.watermark"
-
-  /** Fold the current latest-row state into a compacted baseline and
-    * record the LSN watermark it covers. The raw table stays
-    * append-only and untouched (replay/audit/time-travel intact);
-    * readers via [[latestView]] scan baseline + tail instead of full
-    * history. Run periodically — the streaming analogue of
-    * merge-on-read table services.
-    */
-  def compact(table: TableSchema): Unit = {
-    val current = raw(table)
-    val wmRow = current.agg(max(col(Envelope.LsnCol)),
-      max(col(Envelope.TimestampCol))).collect()(0)
-    // empty raw table: nothing to fold, and a watermark of "null"
-    // would poison the next read — skip
-    if (wmRow.isNullAt(1)) return
-    val wmLsn = if (wmRow.isNullAt(0)) -1L else wmRow.getLong(0)
-    val wmTs = wmRow.getTimestamp(1)
-    val state = latestViewFull(table)
-    state.write.mode("overwrite").parquet(compactedPath(table))
-    // Hadoop FileSystem API, not java.nio: root may be any supported
-    // filesystem (hdfs://, s3a://), same as the parquet writes
-    val p = new org.apache.hadoop.fs.Path(watermarkPath(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(s"$wmLsn\n$wmTs".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  // ---- vacuum: retention as partition drop ------------------------
-
-  private def horizonPath(table: TableSchema) =
-    s"$root/compacted/${table.ref.qualified}.horizon"
-
-  /** First date still present in raw history (1970-01-01 = never
-    * vacuumed). Time travel below it is gone — and fails loudly. */
-  def retentionHorizon(table: TableSchema): java.sql.Date = {
-    val p = new org.apache.hadoop.fs.Path(horizonPath(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) java.sql.Date.valueOf("1970-01-01")
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      java.sql.Date.valueOf(text.trim)
-    }
-  }
-
-  /** Drop raw `_date` partitions older than `retainFrom` whose rows
-    * are all folded into the compacted baseline — the reference's
-    * stated reason for time-partitioning its raw tables ("drop old
-    * data", schema_builders.go:103-106) and the warehouse analogue of
-    * partition expiration. Whole-directory deletes, no rewrite.
-    *
-    * Safety contract, enforced not assumed:
-    *  - requires a compacted baseline, and only drops partitions
-    *    strictly below BOTH `retainFrom` and the compaction
-    *    watermark's date — every dropped row's latest state lives in
-    *    the baseline, so [[latestView]] is unchanged (spec-verified);
-    *  - the horizon sidecar commits (atomic rename) BEFORE deletion:
-    *    a crash in between leaves extra partitions, never a lying
-    *    horizon;
-    *  - [[asOf]] below the horizon throws — pre-horizon time travel
-    *    was deleted, and data loss must never look like an answer.
-    *
-    * @return number of partition directories dropped. */
-  def vacuum(table: TableSchema, retainFrom: java.sql.Date): Long = {
-    val (_, wmTs) = compactionWatermark(table).getOrElse(throw
-      new IllegalStateException(
-        s"vacuum(${table.ref.qualified}) requires compact() first: " +
-          "without a baseline, dropped partitions would lose state"))
-    // a partition d is fully covered iff every possible ts in it
-    // (< d+1 00:00) is <= wmTs, i.e. d is strictly before wmTs's date
-    val wmDate = java.sql.Date.valueOf(wmTs.toLocalDateTime.toLocalDate)
-    val floor = if (retainFrom.before(wmDate)) retainFrom else wmDate
-    val rawDir = new org.apache.hadoop.fs.Path(rawPath(table))
-    val fs = rawDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rawDir)) return 0L
-    val droppable = fs.listStatus(rawDir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("_date="))
-      .filter { s =>
-        val d = java.sql.Date.valueOf(
-          s.getPath.getName.stripPrefix("_date="))
-        d.before(floor)
-      }
-    if (droppable.isEmpty) return 0L
-    // horizon first (atomic), deletion second — see safety contract
-    val prev = retentionHorizon(table)
-    val horizon = if (prev.after(floor)) prev else floor
-    val hp = new org.apache.hadoop.fs.Path(horizonPath(table))
-    val tmp = new org.apache.hadoop.fs.Path(horizonPath(table) + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(horizon.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(hp, false)
-    fs.rename(tmp, hp)
-    droppable.foreach(s => fs.delete(s.getPath, true))
-    droppable.size.toLong
-  }
-
-  private def compactionWatermark(
-      table: TableSchema): Option[(Long, java.sql.Timestamp)] = {
-    val p = new org.apache.hadoop.fs.Path(watermarkPath(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val Array(lsn, ts) = text.trim.split("\n")
-      Some((lsn.toLong, java.sql.Timestamp.valueOf(ts)))
-    }
-  }
-
-  /** Latest rows from the full raw history (ignores compaction).
-    * Truncate markers apply here too, so a compacted baseline folds
-    * them in — markers at or before the compaction watermark then
-    * never need re-applying. */
-  private def latestViewFull(table: TableSchema): DataFrame =
-    ChangelogOps.latestRowsMerged(
-      afterTruncate(raw(table), truncateMarker(table)), table.primaryKeys)
-
-  /** Latest rows, compaction-aware: baseline rows (as IMPORT-like
-    * images at epoch timestamp, watermark LSN) unioned with the raw
-    * tail past the watermark, deduped by the same window. Identical
-    * result to the full-history view — the equivalence is tested —
-    * but the window input is |state| + |tail| instead of |history|.
-    */
-  def latestViewCompacted(table: TableSchema): DataFrame =
-    compactionWatermark(table) match {
-      case None => latestViewFull(table)
-      case Some((wmLsn, wmTs)) => compactedStateRead(table, wmLsn, wmTs, None)
-    }
-
-  /** Baseline + raw tail, optionally bounded above by `upTo` (the
-    * compaction-aware `asOf`): the baseline is state at the watermark,
-    * the tail replays changes in (watermark, upTo]. */
-  private def compactedStateRead(table: TableSchema, wmLsn: Long,
-      wmTs: java.sql.Timestamp,
+  /** The one state read behind [[latestView]], [[asOf]] and
+    * [[compact]]: latest rows at or before `upTo` (None = now).
+    * Without a baseline, or before its watermark, it windows the raw
+    * history — which must then be intact. Otherwise it reads the
+    * baseline (state at the watermark) plus the raw tail past it. */
+  private def state(table: TableSchema,
       upTo: Option[java.sql.Timestamp]): DataFrame = {
-        val rawDf = raw(table)
+    val rawDf = raw(table)
+    def until(df: DataFrame) = upTo.fold(df)(ts =>
+      df.where(col("_date") <= to_date(lit(ts)) &&
+        col(Envelope.TimestampCol) <= lit(ts)))
+    val (input, marker) = baseline(table)
+        .filterNot(b => upTo.exists(_.before(b.wmTs))) match {
+      case None =>
+        // a key's last row at or before upTo may sit in a dropped
+        // partition while the baseline holds NEWER state: the window
+        // would answer wrongly, so refuse
+        require(!vacuumed(table),
+          s"${table.ref.qualified} state${upTo.fold("")(ts => s" as of $ts")} " +
+            "predates the compaction watermark of a vacuumed table " +
+            s"(horizon ${retentionHorizon(table)}): that history was " +
+            "dropped by retention")
+        (until(rawDf), truncateMarker(table, upTo = upTo))
+      case Some(b) =>
         val payloadType = rawDf.schema(Envelope.AfterCol).dataType
           .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val baseline = spark.read.parquet(compactedPath(table))
         // baseline rows re-enter the window as IMPORT-like envelopes
         // at epoch timestamp so any tail change (including DELETEs)
         // wins over them; their cells are fully materialised, so tail
         // rows with unchanged-TOAST markers merge from them
-        val baseEnv = baseline.select(
+        val baseEnv = spark.read.parquet(b.path.toString).select(
           lit(java.sql.Timestamp.valueOf("1970-01-01 00:00:00"))
             .cast("timestamp").as(Envelope.TimestampCol),
-          lit(wmLsn).as(Envelope.LsnCol),
+          lit(b.wmLsn).as(Envelope.LsnCol),
           lit(null).cast("long").as(Envelope.SequenceCol),
           lit(graft.model.Operation.Import).as(Envelope.OperationCol),
           lit(null).cast(payloadType).as(Envelope.BeforeCol),
@@ -377,25 +228,160 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
           Envelope.AfterCol) ++
           (if (rawDf.columns.contains(Envelope.UnchangedCol))
             Seq(Envelope.UnchangedCol) else Nil)
-        val tail = upTo.foldLeft(rawDf
-            .where(col(Envelope.LsnCol) > wmLsn ||
-              (col(Envelope.LsnCol).isNull && col(Envelope.TimestampCol) > lit(wmTs)))) {
-            (df, ts) => df.where(col("_date") <= to_date(lit(ts)) &&
-              col(Envelope.TimestampCol) <= lit(ts))
-          }
+        val tail = until(rawDf.where(col(Envelope.LsnCol) > b.wmLsn ||
+            (col(Envelope.LsnCol).isNull &&
+              col(Envelope.TimestampCol) > lit(b.wmTs))))
           .select(envCols.map(col): _*)
         // markers past the watermark have not been folded into the
         // baseline: apply them to the union (a post-compaction
         // truncate drops the baseline rows too — its epoch timestamp
         // sorts before any marker). Markers at or before the
-        // watermark are already reflected by compact()'s filtered
-        // state and must NOT re-apply, or they would wrongly erase
-        // the baseline's synthetic envelopes.
-        ChangelogOps.latestRowsMerged(
-          afterTruncate(
-            baseEnv.unionByName(tail, allowMissingColumns = true),
-            truncateMarker(table, upTo = upTo, past = Some((wmLsn, wmTs)))),
-          table.primaryKeys)
+        // watermark are already reflected by the baseline and must
+        // NOT re-apply, or they would wrongly erase its synthetic
+        // envelopes.
+        (baseEnv.unionByName(tail, allowMissingColumns = true),
+          truncateMarker(table, upTo = upTo, past = Some((b.wmLsn, b.wmTs))))
+    }
+    ChangelogOps.latestRowsMerged(afterTruncate(input, marker),
+      table.primaryKeys)
+  }
+
+  // ---- compaction: bound the window's read amplification ----
+
+  // Hadoop FileSystem API, not java.nio: root may be any supported
+  // filesystem (hdfs://, s3a://), same as the parquet writes
+  private def fsOf(p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def children(dir: Path): Seq[Path] = {
+    val fs = fsOf(dir)
+    if (fs.exists(dir)) fs.listStatus(dir).toSeq.map(_.getPath) else Nil
+  }
+
+  /** `compacted/<table>/`: one `gen-<n>` directory per published
+    * baseline, each holding its parquet state and the `_watermark`
+    * (lsn, timestamp) it covers. */
+  private def compactedDir(table: TableSchema) =
+    new Path(s"$root/compacted/${table.ref.qualified}")
+
+  private case class Baseline(path: Path, gen: Long, wmLsn: Long,
+      wmTs: java.sql.Timestamp)
+
+  private def generations(table: TableSchema): Seq[(Long, Path)] =
+    children(compactedDir(table)).filter(_.getName.startsWith("gen-"))
+      .map(p => p.getName.stripPrefix("gen-").toLong -> p).sortBy(_._1)
+
+  /** The newest published baseline, if any. */
+  private def baseline(table: TableSchema): Option[Baseline] =
+    generations(table).lastOption.map { case (gen, path) =>
+      val in = fsOf(path).open(new Path(path, "_watermark"))
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      val Array(lsn, ts) = text.trim.split("\n")
+      Baseline(path, gen, lsn.toLong, java.sql.Timestamp.valueOf(ts))
+    }
+
+  /** Fold the current latest-row state into the next compacted
+    * baseline. The raw table stays append-only and untouched
+    * (replay/audit/time-travel intact); readers via [[latestView]]
+    * scan baseline + tail instead of full history. Run periodically —
+    * the streaming analogue of merge-on-read table services.
+    *
+    * The new baseline is read from the one it replaces, so it is
+    * never written in place: it lands in a staging directory with its
+    * watermark, is published by one directory rename as the next
+    * generation, and only then are older generations deleted. Every
+    * crash window leaves a complete newest generation; a staging
+    * leftover is swept by the next run.
+    */
+  def compact(table: TableSchema): Unit = {
+    val wmRow = raw(table).agg(max(col(Envelope.LsnCol)),
+      max(col(Envelope.TimestampCol))).collect()(0)
+    // empty raw table: nothing to fold, and a watermark of "null"
+    // would poison the next read — skip
+    if (wmRow.isNullAt(1)) return
+    val prev = baseline(table)
+    // the watermark never moves back: after a vacuum, raw may no
+    // longer hold the rows the previous baseline covers
+    val wmLsn = math.max(if (wmRow.isNullAt(0)) -1L else wmRow.getLong(0),
+      prev.fold(-1L)(_.wmLsn))
+    val wmTs = prev.map(_.wmTs).filter(_.after(wmRow.getTimestamp(1)))
+      .getOrElse(wmRow.getTimestamp(1))
+    val dir = compactedDir(table)
+    val fs = fsOf(dir)
+    val staging = new Path(dir, "_staging")
+    fs.delete(staging, true)
+    state(table, None).write.parquet(staging.toString)
+    val out = fs.create(new Path(staging, "_watermark"), false)
+    try out.write(s"$wmLsn\n$wmTs".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    val gen = prev.fold(1L)(_.gen + 1)
+    val next = new Path(dir, s"gen-$gen")
+    if (!fs.rename(staging, next))
+      throw new IllegalStateException(
+        s"compact(${table.ref.qualified}) could not publish $next; " +
+          "the previous baseline is untouched")
+    generations(table).filter(_._1 < gen).foreach(g => fs.delete(g._2, true))
+  }
+
+  // ---- vacuum: retention as partition drop ------------------------
+
+  /** One empty marker file per horizon date a vacuum committed. */
+  private def horizonDir(table: TableSchema) =
+    new Path(s"$root/compacted/${table.ref.qualified}.horizon")
+
+  private def horizonMarkers(table: TableSchema): Seq[java.sql.Date] =
+    children(horizonDir(table)).map(_.getName)
+      .filterNot(_.startsWith(".")) // checksum sidecars
+      .map(java.sql.Date.valueOf)
+
+  /** First date still present in raw history (1970-01-01 = never
+    * vacuumed): the newest committed horizon marker. Time travel
+    * below it is gone — and fails loudly. */
+  def retentionHorizon(table: TableSchema): java.sql.Date =
+    horizonMarkers(table).maxOption
+      .getOrElse(java.sql.Date.valueOf("1970-01-01"))
+
+  private def vacuumed(table: TableSchema): Boolean =
+    horizonMarkers(table).nonEmpty
+
+  /** Drop raw `_date` partitions older than `retainFrom` whose rows
+    * are all folded into the compacted baseline — the reference's
+    * stated reason for time-partitioning its raw tables ("drop old
+    * data", schema_builders.go:103-106) and the warehouse analogue of
+    * partition expiration. Whole-directory deletes, no rewrite.
+    *
+    * Safety contract, enforced not assumed:
+    *  - requires a compacted baseline, and only drops partitions
+    *    strictly below BOTH `retainFrom` and the compaction
+    *    watermark's date — every dropped row's latest state lives in
+    *    the baseline, so [[latestView]] is unchanged (spec-verified);
+    *  - the horizon marker is created BEFORE deletion and no marker
+    *    is ever deleted: a crash in between leaves extra partitions,
+    *    never a missing or lying horizon;
+    *  - [[asOf]] below the watermark throws — pre-horizon time travel
+    *    was deleted, and data loss must never look like an answer.
+    *
+    * @return number of partition directories dropped. */
+  def vacuum(table: TableSchema, retainFrom: java.sql.Date): Long = {
+    val b = baseline(table).getOrElse(throw
+      new IllegalStateException(
+        s"vacuum(${table.ref.qualified}) requires compact() first: " +
+          "without a baseline, dropped partitions would lose state"))
+    // a partition d is fully covered iff every possible ts in it
+    // (< d+1 00:00) is <= wmTs, i.e. d is strictly before wmTs's date
+    val wmDate = java.sql.Date.valueOf(b.wmTs.toLocalDateTime.toLocalDate)
+    val floor = if (retainFrom.before(wmDate)) retainFrom else wmDate
+    val droppable = children(new Path(rawPath(table)))
+      .filter(_.getName.startsWith("_date="))
+      .filter(p => java.sql.Date.valueOf(
+        p.getName.stripPrefix("_date=")).before(floor))
+    if (droppable.isEmpty) return 0L
+    // horizon first, deletion second — see safety contract
+    val fs = fsOf(horizonDir(table))
+    fs.create(new Path(horizonDir(table), floor.toString), true).close()
+    droppable.foreach(fs.delete(_, true))
+    droppable.size.toLong
   }
 }
 

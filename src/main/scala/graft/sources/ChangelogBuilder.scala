@@ -85,9 +85,6 @@ final class ChangelogBuilder {
   private var txnTime: Timestamp = new Timestamp(0)
   private var sequence = 0L
 
-  /** Known schema for a relation id, if seen. */
-  def relationOf(id: Long): Option[TableSchema] = relations.get(id)
-
   /** Known schema by qualified `namespace.name` — lets a consumer
     * resolve tables whose Schema entry arrived in an earlier batch
     * (the cache outlives flush epochs, like the reference's). */

@@ -167,4 +167,23 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(graft.ops.SimilarityOps.cellRecall(
       a, "id", "vec", "cell", lit(false), k = 5).count() == 0)
   }
+
+  test("semDedupProbed refuses a caller frame that breaks probe_cells[0] == cell") {
+    import spark.implicits._
+    val v = Seq(1f, 0f)
+    val ok = Seq((1L, v, 0, Option(Seq(0, 1))), (2L, v, 1, Option(Seq(1, 0))))
+    def frame(rows: Seq[(Long, Seq[Float], Int, Option[Seq[Int]])]) =
+      rows.toDF("id", "vec", "cell", "probe_cells")
+    // the contract holds: the keep rule answers (2 drops as 1's dup)
+    assert(SimilarityOps.semDedupProbed(frame(ok), 0.9)
+      .where(col("kept")).count() == 1)
+    // each broken row joins as an owner of cell 0 without being
+    // counted by the one-pass estimate: refused, not under-budgeted
+    for (probe <- Seq(None, Some(Seq.empty[Int]), Some(Seq(1, 0)))) {
+      val e = intercept[IllegalArgumentException](SimilarityOps
+        .semDedupProbed(frame(ok :+ ((3L, v, 0, probe))), 0.9).count())
+      assert(e.getMessage.contains(
+        "semDedupProbed: 1 rows break the probe contract"), e.getMessage)
+    }
+  }
 }

@@ -1820,6 +1820,44 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(spark.read.parquet(store).select($"id").distinct().count() == 3)
   }
 
+  test("LSH store compaction recovers every crash window of the two-rename swap") {
+    val store = java.nio.file.Files.createTempDirectory("lsh_crash").toString + "/store"
+    val a = "the quick brown fox jumps over the lazy dog again and again today"
+    val b = "completely different content about database engines and their query plans"
+    DedupOps.writeLshStore(
+      Seq((1L, a)).toDF("doc_id", "text"), "doc_id", "text", store)
+    DedupOps.appendLshStore(
+      Seq((2L, b)).toDF("doc_id", "text"), "doc_id", "text", store)
+    def probe() = DedupOps.probeLshStore(spark, store,
+        Seq((10L, a + " tomorrow"), (11L, b + " again")).toDF("doc_id", "text"),
+        "doc_id", "text")
+      .select($"new_id", $"store_id").as[(Long, Long)].collect().toSet
+    val expect = probe()
+    assert(expect == Set((10L, 1L), (11L, 2L)))
+
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(store), spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    // crash window 1: first rename done, second never ran — no store
+    // at `path`, full copy at `_prev`. Compaction must restore + fold.
+    assert(fs.rename(p(store), p(store + "_prev")))
+    DedupOps.compactLshStore(spark, store)
+    assert(probe() == expect)
+    assert(!fs.exists(p(store + "_prev")) && !fs.exists(p(store + "_compacting")))
+
+    // crash window 2: swap completed but `_prev` cleanup didn't run —
+    // stale copy next to a live store. Compaction must drop it, not
+    // resurrect it.
+    DedupOps.appendLshStore(
+      Seq((3L, b + " third")).toDF("doc_id", "text"), "doc_id", "text", store)
+    val expect2 = probe()
+    fs.mkdirs(p(store + "_prev")) // stale junk standing in for an old copy
+    DedupOps.compactLshStore(spark, store)
+    assert(probe() == expect2)
+    assert(!fs.exists(p(store + "_prev")))
+    assert(spark.read.parquet(store).select($"id").distinct().count() == 3)
+  }
+
   test("LSH dedup store ingests from a stream: per-batch dedup against all prior batches") {
     // continuous dedup-at-ingest: each micro-batch probes the store as
     // of the batches before it, then appends its survivors

@@ -202,6 +202,70 @@ class PropertySpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  test("warehouse: any insert/compact/truncate/vacuum sequence reads as last-writer-wins") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    import org.apache.spark.sql.Row
+    import graft.model.{ColumnSpec, Envelope, Operation, TableSchema}
+    val table = TableSchema(1L, "public", "pets", Seq(
+      ColumnSpec("id", PgTypes.Int8, key = true),
+      ColumnSpec("name", PgTypes.Text)))
+    type Step = Either[List[(Long, String, String)], String]
+    val genPut = Gen.listOfN(2, Gen.zip(Gen.chooseNum(1L, 6L),
+      Gen.frequency(9 -> Gen.oneOf(Operation.Insert, Operation.Update),
+        1 -> Gen.const(Operation.Delete)),
+      Gen.oneOf("a", "b", "c")))
+    // a round writes one batch, then runs any of the table services
+    // in a random order; the first write makes the raw table exist
+    val genRound = for {
+      rows <- genPut
+      c <- Gen.prob(0.6); v <- Gen.prob(0.6); t <- Gen.prob(0.1)
+      seed <- Gen.long
+    } yield (Left(rows): Step) :: new scala.util.Random(seed).shuffle(
+      List(c -> "compact", v -> "vacuum", t -> "truncate")
+        .collect { case (true, op) => Right(op): Step })
+    val genSteps = Gen.listOfN(4, genRound).map(_.flatten)
+    val prop = Prop.forAllNoShrink(genSteps) { steps =>
+      val sink = new graft.sinks.WarehouseSink(spark,
+        java.nio.file.Files.createTempDirectory("wh_prop").toString)
+      var model = Map.empty[Long, String]
+      var lsn = 0L
+      var compacted = false
+      // one day per step, so vacuum has whole partitions to drop
+      steps.zipWithIndex.foreach { case (step, day) =>
+        val ts = java.sql.Timestamp.valueOf(
+          java.time.LocalDate.of(2024, 1, 1).plusDays(day).atTime(8, 0))
+        step match {
+          case Left(rows) =>
+            val envs = rows.map { case (id, op, name) =>
+              lsn += 1
+              val img = Row(Long.box(id), name)
+              model = if (op == Operation.Delete) model - id
+                else model + (id -> name)
+              Row(ts, Long.box(lsn), Long.box(1L), op,
+                if (op == Operation.Delete) img else null,
+                if (op == Operation.Delete) null else img)
+            }
+            sink.insert(table, spark.createDataFrame(
+              java.util.List.of(envs: _*), Envelope.schemaFor(table.payloadStruct)))
+          case Right("compact") =>
+            sink.compact(table)
+            compacted = true
+          case Right("truncate") =>
+            lsn += 1
+            sink.truncate(table, ts, Some(lsn), Some(1L))
+            model = Map.empty
+          case Right(_) =>
+            if (compacted) sink.vacuum(table, java.sql.Date.valueOf("2100-01-01"))
+        }
+      }
+      sink.latestView(table).select("id", "name").as[(Long, String)]
+        .collect().toMap == model
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   test("asOfJoin equals the brute-force per-row maximum (random keyed series)") {
     val spark = SparkTestSession.spark
     import org.apache.spark.sql.functions._

@@ -108,4 +108,83 @@ class VacuumSpec extends AnyFunSuite {
       .select("id", "name").as[(Long, String)].collect().toSet
     assert(later == Set(1L -> "a5", 2L -> "b"))
   }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame) =
+    df.select("id", "name").as[(Long, String)].collect().toSet
+
+  test("compact -> vacuum -> insert -> compact keeps keys whose only rows were vacuumed") {
+    val wh = tmp()
+    val sink = new WarehouseSink(spark, wh)
+    sink.insert(pets, envBatch("2024-01-01 08:00:00", 10L, Operation.Insert, 1L, "a"))
+    sink.insert(pets, envBatch("2024-01-02 08:00:00", 20L, Operation.Insert, 2L, "b"))
+    sink.insert(pets, envBatch("2024-01-03 08:00:00", 30L, Operation.Update, 1L, "a2"))
+    sink.compact(pets)
+    assert(sink.vacuum(pets, java.sql.Date.valueOf("2024-01-03")) == 2L)
+    sink.insert(pets, envBatch("2024-01-04 08:00:00", 40L, Operation.Insert, 3L, "c"))
+    // the second baseline folds from the first: key 2 lives only there
+    sink.compact(pets)
+    val want = Set(1L -> "a2", 2L -> "b", 3L -> "c")
+    assert(rowsOf(sink.latestView(pets)) == want)
+    assert(rowsOf(sink.asOf(pets,
+      java.sql.Timestamp.valueOf("2024-01-04 08:00:00"))) == want)
+    // published generations: only the newest survives, no staging left
+    val gens = new java.io.File(s"$wh/compacted/public.pets").list().toSet
+    assert(gens == Set("gen-2"), gens)
+  }
+
+  test("a crash at any vacuum or compaction step leaves a horizon and a baseline") {
+    val wh = tmp()
+    val sink = new WarehouseSink(spark, wh)
+    sink.insert(pets, envBatch("2024-01-01 08:00:00", 10L, Operation.Insert, 1L, "a"))
+    sink.insert(pets, envBatch("2024-01-02 08:00:00", 20L, Operation.Insert, 2L, "b"))
+    sink.insert(pets, envBatch("2024-01-03 08:00:00", 30L, Operation.Update, 1L, "a2"))
+    sink.compact(pets)
+    assert(sink.vacuum(pets, java.sql.Date.valueOf("2024-01-02")) == 1L)
+    sink.insert(pets, envBatch("2024-01-04 08:00:00", 40L, Operation.Insert, 3L, "c"))
+    sink.compact(pets) // watermark = (40, 2024-01-04 08:00:00)
+    val want = Set(1L -> "a2", 2L -> "b", 3L -> "c")
+    val belowWm = java.sql.Timestamp.valueOf("2024-01-03 12:00:00")
+    def holds(horizon: String): Unit = {
+      assert(sink.retentionHorizon(pets) == java.sql.Date.valueOf(horizon))
+      assertThrows[IllegalArgumentException](sink.asOf(pets, belowWm))
+      assert(rowsOf(sink.latestView(pets)) == want)
+    }
+    // a second vacuum (retain from 2024-01-04) commits its horizon
+    // marker, then drops _date=2024-01-02 and _date=2024-01-03.
+    // Crash before the marker: the first vacuum's horizon still holds.
+    holds("2024-01-02")
+    // crash after the marker, before any drop
+    val markers = new java.io.File(s"$wh/compacted/public.pets.horizon")
+    assert(new java.io.File(markers, "2024-01-04").createNewFile())
+    holds("2024-01-04")
+    // crash after one of the two drops
+    val rawDir = s"$wh/raw/public.pets"
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$rawDir/_date=2024-01-02"))
+    holds("2024-01-04")
+    // the re-run finishes the drop and keeps the horizon
+    assert(sink.vacuum(pets, java.sql.Date.valueOf("2024-01-04")) == 1L)
+    assert(dateDirs(wh) == Set("_date=2024-01-04"))
+    holds("2024-01-04")
+
+    // a compaction that crashed while writing its staging directory:
+    // readers ignore it and the next run sweeps it
+    val staging = new java.io.File(s"$wh/compacted/public.pets/_staging")
+    assert(staging.mkdirs())
+    java.nio.file.Files.writeString(staging.toPath.resolve("part-0.parquet"), "torn")
+    holds("2024-01-04")
+    sink.compact(pets)
+    assert(!staging.exists())
+    holds("2024-01-04")
+    // crashed after its rename, before deleting the older generation:
+    // readers take the newest, the next run deletes the rest
+    val dir = new java.io.File(s"$wh/compacted/public.pets")
+    val newest = dir.list().filter(_.startsWith("gen-")).maxBy(_.stripPrefix("gen-").toLong)
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir, newest),
+      new java.io.File(dir, "gen-1"))
+    holds("2024-01-04")
+    sink.compact(pets)
+    assert(dir.list().count(_.startsWith("gen-")) == 1)
+    holds("2024-01-04")
+  }
 }
