@@ -1841,28 +1841,27 @@ object SimilarityOps {
     * the window between these two renames would show. */
   private[ops] def rewriteStore(spark: org.apache.spark.sql.SparkSession,
       path: String)(write: String => Unit): Unit = {
-    val staging = path + "_compacting"
-    val prev = path + "_prev"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    import org.apache.hadoop.fs.Path
+    val (live, staging, prev) =
+      (new Path(path), new Path(path + "_compacting"), new Path(path + "_prev"))
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // sweep leftovers from an earlier crashed compaction before
     // reading: a `_prev` here means the last swap completed its
     // first rename only — restore it as the store and retry cleanly
-    if (fs.exists(p(prev))) {
-      if (!fs.exists(p(path))) fs.rename(p(prev), p(path))
-      else fs.delete(p(prev), true)
+    if (fs.exists(prev)) {
+      if (!fs.exists(live)) fs.rename(prev, live)
+      else fs.delete(prev, true)
     }
-    fs.delete(p(staging), true)
-    write(staging)
-    if (!fs.rename(p(path), p(prev)))
+    fs.delete(staging, true)
+    write(staging.toString)
+    if (!fs.rename(live, prev))
       throw new IllegalStateException(
         s"compaction could not move $path aside; store untouched")
-    if (!fs.rename(p(staging), p(path))) {
-      fs.rename(p(prev), p(path)) // roll back; compacted copy kept
+    if (!fs.rename(staging, live)) {
+      fs.rename(prev, live) // roll back; compacted copy kept
       throw new IllegalStateException(
         s"compaction swap failed; store restored, compacted copy at $staging")
     }
-    fs.delete(p(prev), true)
+    fs.delete(prev, true)
   }
 }

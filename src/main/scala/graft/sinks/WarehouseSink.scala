@@ -141,10 +141,8 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
     * (reference: pkg/sinks/bigquery/schema_builders.go:146-161).
     * Unchanged-TOAST cells merge from the previous image when the
     * marker column is present (ChangelogOps.latestRowsMerged).
-    * With a compacted baseline it reads baseline + tail, which is
-    * also what keeps it CORRECT after [[vacuum]] drops raw
-    * partitions the baseline already covers; without one it windows
-    * the full history. */
+    * Once compacted it reads baseline + tail, which stays correct
+    * after [[vacuum]] drops the partitions the baseline covers. */
   def latestView(table: TableSchema): DataFrame = state(table, None)
 
   /** Register both as SQL-queryable views, like the reference's
@@ -196,11 +194,11 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
         // a key's last row at or before upTo may sit in a dropped
         // partition while the baseline holds NEWER state: the window
         // would answer wrongly, so refuse
-        require(!vacuumed(table),
-          s"${table.ref.qualified} state${upTo.fold("")(ts => s" as of $ts")} " +
-            "predates the compaction watermark of a vacuumed table " +
-            s"(horizon ${retentionHorizon(table)}): that history was " +
-            "dropped by retention")
+        require(horizonMarkers(table).isEmpty,
+          s"${table.ref.qualified} state" +
+            s"${upTo.fold("")(ts => s" as of $ts")} predates the " +
+            s"compaction watermark of a vacuumed table (horizon " +
+            s"${retentionHorizon(table)}): retention dropped that history")
         (until(rawDf), truncateMarker(table, upTo = upTo))
       case Some(b) =>
         val payloadType = rawDf.schema(Envelope.AfterCol).dataType
@@ -209,29 +207,30 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
         // at epoch timestamp so any tail change (including DELETEs)
         // wins over them; their cells are fully materialised, so tail
         // rows with unchanged-TOAST markers merge from them
-        val baseEnv = spark.read.parquet(b.path.toString).select(
+        val stored = spark.read.parquet(b.path.toString)
+        // a column added to raw after this baseline was written reads
+        // as null in its rows, like raw's own mergeSchema read
+        val baseEnv = stored.select(
           lit(java.sql.Timestamp.valueOf("1970-01-01 00:00:00"))
             .cast("timestamp").as(Envelope.TimestampCol),
           lit(b.wmLsn).as(Envelope.LsnCol),
           lit(null).cast("long").as(Envelope.SequenceCol),
           lit(graft.model.Operation.Import).as(Envelope.OperationCol),
           lit(null).cast(payloadType).as(Envelope.BeforeCol),
-          struct(payloadType.fields.toIndexedSeq.map(f => col(f.name)): _*)
+          struct(payloadType.fields.toIndexedSeq.map(f =>
+              if (stored.columns.contains(f.name)) col(f.name)
+              else lit(null).cast(f.dataType).as(f.name)): _*)
             .cast(payloadType).as(Envelope.AfterCol))
         // tail = stream rows past the LSN watermark, plus lsn-null
         // (import) rows past the timestamp watermark. Contract: rows
         // at or before both watermarks are fully represented by the
         // baseline — i.e. compaction assumes watermark-ordered
-        // arrival, the same at-least-once contract as the ack.
-        val envCols = Seq(Envelope.TimestampCol, Envelope.LsnCol,
-          Envelope.SequenceCol, Envelope.OperationCol, Envelope.BeforeCol,
-          Envelope.AfterCol) ++
-          (if (rawDf.columns.contains(Envelope.UnchangedCol))
-            Seq(Envelope.UnchangedCol) else Nil)
+        // arrival, the same at-least-once contract as the ack. Its
+        // _date/_pk_ columns read as null on baseline rows; the window
+        // projects the image only.
         val tail = until(rawDf.where(col(Envelope.LsnCol) > b.wmLsn ||
             (col(Envelope.LsnCol).isNull &&
               col(Envelope.TimestampCol) > lit(b.wmTs))))
-          .select(envCols.map(col): _*)
         // markers past the watermark have not been folded into the
         // baseline: apply them to the union (a post-compaction
         // truncate drops the baseline rows too — its epoch timestamp
@@ -258,28 +257,53 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
     if (fs.exists(dir)) fs.listStatus(dir).toSeq.map(_.getPath) else Nil
   }
 
-  /** `compacted/<table>/`: one `gen-<n>` directory per published
-    * baseline, each holding its parquet state and the `_watermark`
-    * (lsn, timestamp) it covers. */
+  /** `compacted/<table>/`: one `gen-<n>` directory per baseline, with
+    * its parquet state and the `_watermark` (lsn, timestamp) it covers. */
   private def compactedDir(table: TableSchema) =
     new Path(s"$root/compacted/${table.ref.qualified}")
 
-  private case class Baseline(path: Path, gen: Long, wmLsn: Long,
+  /** Earlier warehouses kept one flat baseline beside `.watermark`
+    * and `.horizon` files; this layout would ignore the one and
+    * misread the other, so refuse by name. */
+  private def requireCurrentLayout(table: TableSchema): Unit = {
+    val sidecar = new Path(s"${compactedDir(table)}.watermark")
+    val horizon = horizonDir(table)
+    val fs = fsOf(sidecar)
+    require(!fs.exists(sidecar) &&
+        !(fs.exists(horizon) && fs.getFileStatus(horizon).isFile),
+      s"${table.ref.qualified} is in the older flat-baseline warehouse " +
+        s"layout ($sidecar, $horizon); SCALING.md \"Warehouse vacuum\" " +
+        "says how to migrate")
+  }
+
+  private case class Baseline(path: Path, wmLsn: Long,
       wmTs: java.sql.Timestamp)
 
-  private def generations(table: TableSchema): Seq[(Long, Path)] =
+  /** Every `gen-<n>` directory, published or not, oldest first. */
+  private def generations(table: TableSchema): Seq[(Long, Path)] = {
+    requireCurrentLayout(table)
     children(compactedDir(table)).filter(_.getName.startsWith("gen-"))
       .map(p => p.getName.stripPrefix("gen-").toLong -> p).sortBy(_._1)
+  }
 
-  /** The newest published baseline, if any. */
+  /** The newest published baseline, if any: a generation is published
+    * once its `_watermark` is complete (two newline-terminated lines),
+    * so one still being written, or torn by a crash, is skipped. */
   private def baseline(table: TableSchema): Option[Baseline] =
-    generations(table).lastOption.map { case (gen, path) =>
-      val in = fsOf(path).open(new Path(path, "_watermark"))
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    generations(table).reverseIterator.map(_._2).flatMap { path =>
+      val wm = new Path(path, "_watermark")
+      val fs = fsOf(wm)
+      val text = if (!fs.exists(wm)) "" else {
+        val in = fs.open(wm)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
-      val Array(lsn, ts) = text.trim.split("\n")
-      Baseline(path, gen, lsn.toLong, java.sql.Timestamp.valueOf(ts))
-    }
+      }
+      text.split("\n", -1) match {
+        case Array(lsn, ts, "") =>
+          Some(Baseline(path, lsn.toLong, java.sql.Timestamp.valueOf(ts)))
+        case _ => None
+      }
+    }.nextOption()
 
   /** Fold the current latest-row state into the next compacted
     * baseline. The raw table stays append-only and untouched
@@ -288,14 +312,14 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
     * the streaming analogue of merge-on-read table services.
     *
     * The new baseline is read from the one it replaces, so it is
-    * never written in place: it lands in a staging directory with its
-    * watermark, is published by one directory rename as the next
-    * generation, and only then are older generations deleted. Every
-    * crash window leaves a complete newest generation; a staging
-    * leftover is swept by the next run.
+    * never written in place: it goes into a fresh `gen-<n>` directory
+    * and its `_watermark`, written last, publishes it. Only then are
+    * older generations deleted — published ones and any a crashed run
+    * left unpublished. No step renames a directory, so every crash
+    * window leaves the previous baseline readable on any filesystem.
     */
   def compact(table: TableSchema): Unit = {
-    val wmRow = raw(table).agg(max(col(Envelope.LsnCol)),
+    val wmRow = raw(table).agg(coalesce(max(col(Envelope.LsnCol)), lit(-1L)),
       max(col(Envelope.TimestampCol))).collect()(0)
     // empty raw table: nothing to fold, and a watermark of "null"
     // would poison the next read — skip
@@ -303,25 +327,18 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
     val prev = baseline(table)
     // the watermark never moves back: after a vacuum, raw may no
     // longer hold the rows the previous baseline covers
-    val wmLsn = math.max(if (wmRow.isNullAt(0)) -1L else wmRow.getLong(0),
-      prev.fold(-1L)(_.wmLsn))
+    val wmLsn = math.max(wmRow.getLong(0), prev.fold(-1L)(_.wmLsn))
     val wmTs = prev.map(_.wmTs).filter(_.after(wmRow.getTimestamp(1)))
       .getOrElse(wmRow.getTimestamp(1))
-    val dir = compactedDir(table)
-    val fs = fsOf(dir)
-    val staging = new Path(dir, "_staging")
-    fs.delete(staging, true)
-    state(table, None).write.parquet(staging.toString)
-    val out = fs.create(new Path(staging, "_watermark"), false)
-    try out.write(s"$wmLsn\n$wmTs".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val older = generations(table)
+    val next = new Path(compactedDir(table),
+      s"gen-${older.lastOption.fold(1L)(_._1 + 1)}")
+    state(table, None).write.parquet(next.toString)
+    val fs = fsOf(next)
+    val out = fs.create(new Path(next, "_watermark"), false)
+    try out.write(s"$wmLsn\n$wmTs\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    val gen = prev.fold(1L)(_.gen + 1)
-    val next = new Path(dir, s"gen-$gen")
-    if (!fs.rename(staging, next))
-      throw new IllegalStateException(
-        s"compact(${table.ref.qualified}) could not publish $next; " +
-          "the previous baseline is untouched")
-    generations(table).filter(_._1 < gen).foreach(g => fs.delete(g._2, true))
+    older.foreach(g => fs.delete(g._2, true))
   }
 
   // ---- vacuum: retention as partition drop ------------------------
@@ -330,10 +347,12 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
   private def horizonDir(table: TableSchema) =
     new Path(s"$root/compacted/${table.ref.qualified}.horizon")
 
-  private def horizonMarkers(table: TableSchema): Seq[java.sql.Date] =
+  private def horizonMarkers(table: TableSchema): Seq[java.sql.Date] = {
+    requireCurrentLayout(table)
     children(horizonDir(table)).map(_.getName)
       .filterNot(_.startsWith(".")) // checksum sidecars
       .map(java.sql.Date.valueOf)
+  }
 
   /** First date still present in raw history (1970-01-01 = never
     * vacuumed): the newest committed horizon marker. Time travel
@@ -341,9 +360,6 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
   def retentionHorizon(table: TableSchema): java.sql.Date =
     horizonMarkers(table).maxOption
       .getOrElse(java.sql.Date.valueOf("1970-01-01"))
-
-  private def vacuumed(table: TableSchema): Boolean =
-    horizonMarkers(table).nonEmpty
 
   /** Drop raw `_date` partitions older than `retainFrom` whose rows
     * are all folded into the compacted baseline — the reference's

@@ -133,4 +133,31 @@ class BucketingSpec extends AnyFunSuite {
     // evolution, like the reference's blind schema update
     assert(after == Set((1L, "old", None), (2L, "new", Some("x"))))
   }
+
+  test("a compacted baseline reads a column added after it as null") {
+    import graft.model._
+    import graft.sinks.WarehouseSink
+    import org.apache.spark.sql.Row
+    val sink = new WarehouseSink(spark,
+      Files.createTempDirectory("graft-evolve-compact").toString)
+    val v1 = TableSchema(1, "public", "one", Seq(
+      ColumnSpec("id", PgTypes.Int8, key = true),
+      ColumnSpec("msg", PgTypes.Text)))
+    val v2 = v1.copy(columns = v1.columns :+ ColumnSpec("another", PgTypes.Text))
+    def batch(schema: TableSchema, vals: Seq[Any], lsn: Long) =
+      spark.createDataFrame(java.util.List.of(Row(
+          java.sql.Timestamp.valueOf(s"2024-01-0$lsn 00:00:00"), lsn, 1L,
+          "INSERT", null, Row.fromSeq(vals))),
+        Envelope.schemaFor(schema.payloadStruct))
+    def rows() = sink.latestView(v2).select("id", "msg", "another")
+      .collect().map(r => (r.getLong(0), r.getString(1), Option(r.getString(2)))).toSet
+    val want = Set((1L, "old", None), (2L, "new", Some("x")))
+    sink.insert(v1, batch(v1, Seq(1L, "old"), 1L))
+    sink.compact(v1)
+    // payloadStruct is name-sorted: v2 = (another, id, msg)
+    sink.insert(v2, batch(v2, Seq("x", 2L, "new"), 2L))
+    assert(rows() == want)
+    sink.compact(v2)
+    assert(rows() == want)
+  }
 }

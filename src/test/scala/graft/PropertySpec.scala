@@ -215,14 +215,17 @@ class PropertySpec extends AnyFunSuite {
       Gen.frequency(9 -> Gen.oneOf(Operation.Insert, Operation.Update),
         1 -> Gen.const(Operation.Delete)),
       Gen.oneOf("a", "b", "c")))
-    // a round writes one batch, then runs any of the table services
-    // in a random order; the first write makes the raw table exist
+    // a round writes one batch, then vacuums, mostly compacts and
+    // sometimes truncates, in a random order; the first write makes
+    // the raw table exist. A compaction costs about a second, so the
+    // spec runs few cases of rounds where a vacuum always has a chance
+    // to drop what the next compaction must keep.
     val genRound = for {
       rows <- genPut
-      c <- Gen.prob(0.6); v <- Gen.prob(0.6); t <- Gen.prob(0.1)
+      c <- Gen.prob(0.9); t <- Gen.prob(0.1)
       seed <- Gen.long
     } yield (Left(rows): Step) :: new scala.util.Random(seed).shuffle(
-      List(c -> "compact", v -> "vacuum", t -> "truncate")
+      List(c -> "compact", true -> "vacuum", t -> "truncate")
         .collect { case (true, op) => Right(op): Step })
     val genSteps = Gen.listOfN(4, genRound).map(_.flatten)
     val prop = Prop.forAllNoShrink(genSteps) { steps =>
@@ -246,8 +249,10 @@ class PropertySpec extends AnyFunSuite {
                 if (op == Operation.Delete) img else null,
                 if (op == Operation.Delete) null else img)
             }
-            sink.insert(table, spark.createDataFrame(
-              java.util.List.of(envs: _*), Envelope.schemaFor(table.payloadStruct)))
+            // insertCounted skips the count job that insert runs
+            sink.insertCounted(table, spark.createDataFrame(
+              java.util.List.of(envs: _*), Envelope.schemaFor(table.payloadStruct)),
+              graft.sinks.InsertResult(envs.size.toLong, Some(lsn)))
           case Right("compact") =>
             sink.compact(table)
             compacted = true
@@ -262,7 +267,7 @@ class PropertySpec extends AnyFunSuite {
       sink.latestView(table).select("id", "name").as[(Long, String)]
         .collect().toMap == model
     }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(3), prop)
     assert(res.passed, res.status.toString)
   }
 

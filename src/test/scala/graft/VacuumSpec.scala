@@ -127,7 +127,7 @@ class VacuumSpec extends AnyFunSuite {
     assert(rowsOf(sink.latestView(pets)) == want)
     assert(rowsOf(sink.asOf(pets,
       java.sql.Timestamp.valueOf("2024-01-04 08:00:00"))) == want)
-    // published generations: only the newest survives, no staging left
+    // published generations: only the newest survives
     val gens = new java.io.File(s"$wh/compacted/public.pets").list().toSet
     assert(gens == Set("gen-2"), gens)
   }
@@ -167,18 +167,22 @@ class VacuumSpec extends AnyFunSuite {
     assert(dateDirs(wh) == Set("_date=2024-01-04"))
     holds("2024-01-04")
 
-    // a compaction that crashed while writing its staging directory:
-    // readers ignore it and the next run sweeps it
-    val staging = new java.io.File(s"$wh/compacted/public.pets/_staging")
-    assert(staging.mkdirs())
-    java.nio.file.Files.writeString(staging.toPath.resolve("part-0.parquet"), "torn")
+    // a compaction that crashed while writing its generation, before
+    // its _watermark (or partway through it): readers skip it and the
+    // next run sweeps it
+    val dir = new java.io.File(s"$wh/compacted/public.pets")
+    val torn = new java.io.File(dir, "gen-7")
+    assert(torn.mkdirs())
+    java.nio.file.Files.writeString(torn.toPath.resolve("part-0.parquet"), "torn")
+    holds("2024-01-04")
+    java.nio.file.Files.writeString(torn.toPath.resolve("_watermark"), "50\n")
     holds("2024-01-04")
     sink.compact(pets)
-    assert(!staging.exists())
+    assert(!torn.exists())
+    assert(dir.list().filter(_.startsWith("gen-")).toSeq == Seq("gen-8"))
     holds("2024-01-04")
-    // crashed after its rename, before deleting the older generation:
+    // crashed after publishing, before deleting the older generation:
     // readers take the newest, the next run deletes the rest
-    val dir = new java.io.File(s"$wh/compacted/public.pets")
     val newest = dir.list().filter(_.startsWith("gen-")).maxBy(_.stripPrefix("gen-").toLong)
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir, newest),
       new java.io.File(dir, "gen-1"))
@@ -186,5 +190,25 @@ class VacuumSpec extends AnyFunSuite {
     sink.compact(pets)
     assert(dir.list().count(_.startsWith("gen-")) == 1)
     holds("2024-01-04")
+  }
+
+  test("a warehouse in the older flat-baseline layout fails by name") {
+    val wh = tmp()
+    val sink = new WarehouseSink(spark, wh)
+    sink.insert(pets, envBatch("2024-01-01 08:00:00", 10L, Operation.Insert, 1L, "a"))
+    val horizon = new java.io.File(s"$wh/compacted/public.pets.horizon")
+    assert(horizon.getParentFile.mkdirs())
+    java.nio.file.Files.writeString(horizon.toPath, "2024-01-01")
+    for (read <- Seq[() => Any](() => sink.latestView(pets),
+        () => sink.compact(pets), () => sink.retentionHorizon(pets))) {
+      val e = intercept[IllegalArgumentException](read())
+      assert(e.getMessage.contains("older flat-baseline"), e.getMessage)
+    }
+    assert(horizon.delete())
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$wh/compacted/public.pets.watermark"),
+      "10\n2024-01-01 08:00:00")
+    val e = intercept[IllegalArgumentException](sink.latestView(pets))
+    assert(e.getMessage.contains("older flat-baseline"), e.getMessage)
   }
 }
