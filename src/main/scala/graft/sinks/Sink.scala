@@ -59,7 +59,9 @@ trait Sink {
     * cost at 100k-frame epochs). Sinks that only need the fold for
     * their return value can override to trust the caller's; the
     * default ignores the hint and keeps the single-source-of-truth
-    * aggregate. */
+    * aggregate. The streaming pipeline passes a driver-held batch (a
+    * `LocalRelation` under `coalesce(1)`), which a sink may write
+    * without a Spark job, as the warehouse sink does. */
   def insertCounted(table: TableSchema, batch: DataFrame,
       known: InsertResult): InsertResult =
     insert(table, batch)

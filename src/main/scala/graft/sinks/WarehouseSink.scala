@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.model.{Envelope, TableSchema}
 import graft.ops.ChangelogOps
 
@@ -23,6 +24,11 @@ import graft.ops.ChangelogOps
   * - writes are append-only; replays are harmless because the view
   *   dedups by (pk, timestamp, lsn, sequence) — at-least-once
   *   delivery + merge-on-read, the reference's exact design.
+  * - imports ([[insert]]) append with a distributed Spark write; a
+  *   flush epoch's driver-held batch ([[insertCounted]]) and truncate
+  *   markers are written on the driver by Spark's parquet writer, one
+  *   file per `_date` directory, each under a hidden name and
+  *   published by one rename — no Spark job on the ack path.
   */
 final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
   private val handler = new SchemaHandler(_ => ())
@@ -35,35 +41,43 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
 
   override def insert(table: TableSchema, batch: DataFrame): InsertResult = {
     val result = InsertResult.of(batch.cache())
-    write(table, batch)
+    write(table, laidOut(table, batch))
     batch.unpersist()
     result
   }
 
-  /** One job per flush epoch: the caller's fold is trusted, so the
-    * batch streams straight into the append with no cache and no
-    * count/max pre-pass. A caller that ships one partition (the
-    * streaming pipeline does) gets one task and one parquet file per
-    * `_date` partition. */
+  /** The flush-epoch insert: the caller's fold is trusted, so there is
+    * no cache and no count/max pre-pass. A batch the driver holds (a
+    * `LocalRelation`, as the streaming pipeline builds) is written on
+    * the driver by Spark's parquet writer, one file per `_date`
+    * directory, with no Spark job; any other batch takes the
+    * distributed [[write]]. */
   override def insertCounted(table: TableSchema, batch: DataFrame,
       known: InsertResult): InsertResult = {
-    write(table, batch)
+    val rows = laidOut(table, batch)
+    if (!Bridge.appendDriverParquet(rows, rawPath(table), Some("_date"), pkCols(table)))
+      write(table, rows)
     known
   }
 
-  private def write(table: TableSchema, batch: DataFrame): Unit = {
-    val pks = table.primaryKeys
+  /** The raw layout's added columns: the `_date` partition and the
+    * materialised primary keys, which give parquet row-group min/max
+    * stats. */
+  private def laidOut(table: TableSchema, batch: DataFrame): DataFrame = {
     val image = coalesce(col(Envelope.AfterCol), col(Envelope.BeforeCol))
-    val sortCols = pks.map(k => col(s"_pk_$k"))
     batch
       .withColumn("_date", to_date(col(Envelope.TimestampCol)))
-      // materialised pk columns give parquet row-group min/max stats
-      .withColumns(pks.map(k => s"_pk_$k" -> image.getField(k)).toMap)
-      .sortWithinPartitions(col("_date") +: sortCols: _*)
+      .withColumns(table.primaryKeys.map(k => s"_pk_$k" -> image.getField(k)).toMap)
+  }
+
+  private def pkCols(table: TableSchema): Seq[String] =
+    table.primaryKeys.map(k => s"_pk_$k")
+
+  private def write(table: TableSchema, rows: DataFrame): Unit =
+    rows.sortWithinPartitions(("_date" +: pkCols(table)).map(col): _*)
       .write.mode("append")
       .partitionBy("_date")
       .parquet(rawPath(table))
-  }
 
   /** Read the raw changelog back (schema evolution via mergeSchema —
     * the add-columns-only policy of the reference's blind update,
@@ -90,10 +104,12 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
       StructField("timestamp", TimestampType, nullable = false),
       StructField("lsn", LongType, nullable = true),
       StructField("sequence", LongType, nullable = true)))
-    spark.createDataFrame(
-        java.util.List.of(Row(at, lsn.map(Long.box).orNull,
-          sequence.map(Long.box).orNull)), schema)
-      .write.mode("append").parquet(truncatePath(table))
+    val marker = spark.createDataFrame(
+      java.util.List.of(Row(at, lsn.map(Long.box).orNull,
+        sequence.map(Long.box).orNull)), schema)
+    // one driver-held row: the ack path writes it without a Spark job
+    if (!Bridge.appendDriverParquet(marker, truncatePath(table)))
+      marker.write.mode("append").parquet(truncatePath(table))
   }
 
   /** Newest truncate position, optionally bounded above by `upTo`

@@ -29,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * - a single input partition per batch: the frame stream is ordered
   *   and the downstream ChangelogBuilder relies on Relation messages
   *   preceding their rows. Decode stays on the driver; the parallel
-  *   step after it is one insert job per table per flush epoch.
+  *   step after it is one insert per table per flush epoch.
   *
   * Usage:
   * {{{

@@ -12,7 +12,7 @@ import graft.sources.{ChangelogBuilder, PgOutput}
   * ack. One streaming query routes every table; the ordered, stateful
   * stage is the driver-side decode (relation cache + transaction
   * framing live across micro-batches in a [[ChangelogBuilder]]); each
-  * table's epoch batch is one driver-built partition, one insert job.
+  * table's epoch batch is one driver-built partition, one insert.
   *
   * This mirrors the reference's thread chain — receive loop,
   * Sequence, BuildChangelog, router, sink (cmd/pgsink/cmd/app.go:
@@ -26,11 +26,13 @@ object FrameStreamPipeline {
     * epoch runs at a time per query, so a process-wide bounded pool
     * (8 daemon threads, idle-reclaimed) serves every pipeline without
     * per-epoch executor churn — a 1-second trigger would otherwise
-    * create and tear down a pool every epoch, forever. The cap bounds
-    * driver-side row-conversion concurrency and the number of jobs in
-    * flight; each job is one task (every table's epoch batch is one
-    * partition, see processBatch), so at most 8 write tasks compete
-    * for the executor pool per epoch. */
+    * create and tear down a pool every epoch, forever. The warehouse
+    * sink writes each table's rows on its pool thread, with no Spark
+    * job, so tables write their parquet in parallel. Sinks that write
+    * through Spark (file, JDBC, BigQuery) start one job per table from
+    * here; the cap bounds those jobs in flight, each one task (every
+    * table's epoch batch is one partition, see processBatch), and the
+    * driver-side row conversion. */
   private lazy val insertEc: scala.concurrent.ExecutionContext = {
     val tf = new java.util.concurrent.ThreadFactory {
       private val n = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -123,21 +125,22 @@ object FrameStreamPipeline {
 
     val mods = entries.collect { case m: ChangelogBuilder.ModificationEntry => m }
     var maxLsn: Option[Long] = None
-    // Per-table inserts run CONCURRENTLY: each table's append is one
-    // driver-issued Spark job, and the routed path's cost at N tables
-    // is N sequential jobs per flush epoch if issued one at a time —
-    // the fan-out term (8 tables halved throughput when serialized,
-    // SCALING round 5). Spark's scheduler interleaves
-    // concurrently-submitted jobs across the executor pool, so
-    // submitting them together is the reference's per-table async
-    // inserter (pkg/sinks buffered inserters, one per table) on
-    // Spark's clock. Bounded pool: table count capped at 8 threads,
-    // which bounds driver-side row conversion and the jobs in flight;
-    // each job is a single write task (one partition per table, see
-    // the LocalRelation below). Ordering is untouched: rows within a
-    // table stay one append; cross-table ordering is carried by
-    // (timestamp, lsn, sequence) in the data, not by call order; the
-    // epoch's ack still waits for EVERY insert (Await below), so a
+    // Per-table inserts run CONCURRENTLY — the reference's per-table
+    // async inserter (pkg/sinks buffered inserters, one per table).
+    // The warehouse sink writes a table's driver-held rows on the
+    // driver, no Spark job, so the tables' parquet writes overlap on
+    // the pool. A sink that writes through Spark issues one job per
+    // table, and the routed path's cost at N tables is N sequential
+    // jobs per flush epoch if issued one at a time — the fan-out term
+    // (8 tables halved throughput when serialized, SCALING round 5);
+    // Spark's scheduler interleaves concurrently-submitted jobs across
+    // the executor pool. Bounded pool: table count capped at 8
+    // threads, which bounds driver-side row conversion and the jobs in
+    // flight; each job is a single write task (one partition per
+    // table, see the LocalRelation below). Ordering is untouched: rows
+    // within a table stay one append; cross-table ordering is carried
+    // by (timestamp, lsn, sequence) in the data, not by call order;
+    // the epoch's ack still waits for EVERY insert (Await below), so a
     // failure fails the batch before anything is confirmed.
     val byTable = mods.groupBy(m => s"${m.namespace}.${m.name}").toSeq
     if (byTable.nonEmpty) {
@@ -186,7 +189,8 @@ object FrameStreamPipeline {
             // on the ack's blocking path. The driver holds every row
             // and admission (maxFramesPerTrigger) bounds the epoch, so
             // one task gives up no useful parallelism; the import path
-            // keeps its parallel write.
+            // keeps its parallel write. The warehouse sink recognises
+            // this shape and writes it on the driver with no job.
             val df = spark.createDataFrame(
               scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava,
               Envelope.schemaFor(payloadType, withToastMarker = true))
