@@ -108,8 +108,8 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
       java.util.List.of(Row(at, lsn.map(Long.box).orNull,
         sequence.map(Long.box).orNull)), schema)
     // one driver-held row: the ack path writes it without a Spark job
-    if (!Bridge.appendDriverParquet(marker, truncatePath(table)))
-      marker.write.mode("append").parquet(truncatePath(table))
+    require(Bridge.appendDriverParquet(marker, truncatePath(table)),
+      "a truncate marker is driver-held")
   }
 
   /** Newest truncate position, optionally bounded above by `upTo`

@@ -55,7 +55,10 @@ object Bridge {
     * optimizer's ConvertToLocalRelation would. Each file is written
     * under a hidden name (Spark's file listing skips names starting
     * with `.`) and published by one rename once every file is
-    * written, so a crash leaves no torn file visible. */
+    * written, so no torn file is ever visible. A failure deletes the
+    * hidden files not yet published; a crash partway through the
+    * renames can leave part of the batch visible, which is harmless
+    * to a caller whose appends are replayed and deduplicated. */
   def appendDriverParquet(df: Dataset[_], dir: String,
       partitionBy: Option[String] = None, sortBy: Seq[String] = Nil): Boolean = {
     val plan = analyzed(df)
@@ -91,16 +94,19 @@ object Bridge {
       (new Path(parent, s".$name.inprogress"), new Path(parent, name), rs)
     }
     val fs = root.getFileSystem(job.getConfiguration)
-    try files.foreach { case (hidden, _, rs) =>
-      val writer = factory.newInstance(hidden.toString, dataSchema, ctx)
-      try rs.foreach(r => writer.write(keep(r))) finally writer.close()
+    try {
+      files.foreach { case (hidden, _, rs) =>
+        val writer = factory.newInstance(hidden.toString, dataSchema, ctx)
+        try rs.foreach(r => writer.write(keep(r))) finally writer.close()
+      }
+      files.foreach { case (hidden, visible, _) =>
+        if (!fs.rename(hidden, visible))
+          throw new java.io.IOException(s"could not publish $hidden as $visible")
+      }
     } catch { case e: Throwable =>
+      // published files are gone from their hidden names already
       files.foreach(f => scala.util.Try(fs.delete(f._1, false)))
       throw e
-    }
-    files.foreach { case (hidden, visible, _) =>
-      if (!fs.rename(hidden, visible))
-        throw new java.io.IOException(s"could not publish $hidden as $visible")
     }
     true
   }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -57,28 +56,10 @@ class DriverWriteSpec extends AnyFunSuite {
   private def jobsDuring(body: => Unit): Int = {
     val sc = spark.sparkContext
     val group = s"driver-write-${System.nanoTime()}"
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    @volatile var sentinel = -1
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          started.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinel) flushed.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
+    SparkJobs.groupsDuring(sc) {
       sc.setJobGroup(group, "driver write probe")
       try body finally sc.clearJobGroup()
-      // listener events arrive in order: once a job started after the
-      // body has ended, every job of the body has been seen
-      val probe = sc.parallelize(Seq(1), 1).countAsync()
-      sentinel = probe.jobIds.head
-      probe.get()
-      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    started.get()
+    }.count(_ == group)
   }
 
   private def dateDirs(sink: WarehouseSink): Seq[java.io.File] =
@@ -99,6 +80,11 @@ class DriverWriteSpec extends AnyFunSuite {
     assert(sorted(driver.raw(lines)) == sorted(distributed.raw(lines)))
     assert(sorted(driver.latestView(lines)) == sorted(distributed.latestView(lines)))
     assert(driver.latestView(lines).count() > 0)
+
+    // a batch only a Spark job can compute keeps the distributed write
+    val shuffled = new WarehouseSink(spark, tmp())
+    assert(jobsDuring { shuffled.insertCounted(lines, frame(rows).repartition(2), known(rows)) } > 0)
+    assert(sorted(shuffled.raw(lines)) == sorted(distributed.raw(lines)))
 
     val dirs = dateDirs(driver)
     assert(dirs.map(_.getName).toSet == Set("_date=2024-03-01", "_date=2024-03-02"))

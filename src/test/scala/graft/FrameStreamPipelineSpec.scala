@@ -1,10 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.model.PgTypes
-import graft.sinks.WarehouseSink
+import graft.model.{PgTypes, TableSchema}
+import graft.sinks.{InsertResult, Sink, WarehouseSink}
 import graft.sources._
 import graft.streaming.{CdcPipeline, FrameStreamPipeline}
 
@@ -99,9 +100,30 @@ class FrameStreamPipelineSpec extends AnyFunSuite {
     assert(wm.position.contains(300L))
   }
 
+  /** Runs each flush-epoch insert under a job group of its own, so a
+    * listener can tell the jobs an insert starts. */
+  final class GroupedInserts(sink: Sink) extends Sink {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def handleSchema(schema: TableSchema) = sink.handleSchema(schema)
+    def insert(table: TableSchema, batch: DataFrame) = sink.insert(table, batch)
+    override def insertCounted(table: TableSchema, batch: DataFrame,
+        known: InsertResult): InsertResult = {
+      val sc = spark.sparkContext
+      val outer = sc.getLocalProperty("spark.jobGroup.id")
+      val group = s"insert-${java.util.UUID.randomUUID()}"
+      groups.add(group)
+      sc.setLocalProperty("spark.jobGroup.id", group)
+      try sink.insertCounted(table, batch, known)
+      finally sc.setLocalProperty("spark.jobGroup.id", outer)
+    }
+    def truncate(table: TableSchema, at: java.sql.Timestamp,
+        lsn: Option[Long], sequence: Option[Long]) = sink.truncate(table, at, lsn, sequence)
+  }
+
   test("each table's flush-epoch batch lands as one parquet file") {
     val frameDir = tmp(); val ckpt = tmp(); val wh = tmp()
     val sink = new WarehouseSink(spark, wh)
+    val grouped = new GroupedInserts(sink)
     val wm = new CdcPipeline.AckWatermark
     val rel2 = Relation(2L, "public", "owners", 'd'.toByte, Seq(
       RelationColumn(key = true, "id", PgTypes.Int8, -1),
@@ -117,9 +139,16 @@ class FrameStreamPipelineSpec extends AnyFunSuite {
         ids.map(i => encodeInsert(Insert(2L,
           TupleData(Seq(cell(i.toString), cell(s"o$i@b.c")))))) ++
         Seq(encodeCommit(Commit(0, 400L, 401L, 0L))))
-    val q = FrameStreamPipeline.start(spark, frameDir, sink, wm, ckpt, "1 seconds")
-    try q.processAllAvailable() finally q.stop()
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    val started = SparkJobs.groupsDuring(spark.sparkContext) {
+      q = FrameStreamPipeline.start(spark, frameDir, grouped, wm, ckpt, "1 seconds")
+      try q.processAllAvailable() finally q.stop()
+    }
     assert(q.recentProgress.count(_.numInputRows > 0) == 1)
+    // the warehouse writes the pipeline's driver-held batches itself:
+    // neither table's insert starts a Spark job
+    assert(grouped.groups.size == 2)
+    assert(started.count(g => grouped.groups.contains(g)) == 0)
 
     val pets = graft.model.TableSchema(1L, "public", "pets", Seq(
       graft.model.ColumnSpec("id", PgTypes.Int8, key = true),
