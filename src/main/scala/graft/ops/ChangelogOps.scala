@@ -30,6 +30,7 @@ object ChangelogOps {
     * @param keyCols payload primary-key columns, e.g. `$"after.id"`.
     */
   def latestRowView(changelog: DataFrame, keyCols: Seq[Column]): DataFrame = {
+    requireKey(keyCols, "latestRowView")
     val w = Window.partitionBy(keyCols: _*)
       .orderBy(col(Envelope.TimestampCol).desc, col(Envelope.LsnCol).desc_nulls_last,
         col(Envelope.SequenceCol).desc_nulls_last)
@@ -44,6 +45,7 @@ object ChangelogOps {
     * reference's generated view.
     */
   def latestRows(changelog: DataFrame, primaryKeys: Seq[String]): DataFrame = {
+    requireKey(primaryKeys, "latestRows")
     val image = Envelope.afterOrBefore(changelog)
     val keyed = changelog.withColumn("_img", image)
     latestRowView(keyed, primaryKeys.map(k => col(s"_img.$k")))
@@ -58,28 +60,38 @@ object ChangelogOps {
     * without this merge they would surface as NULL (the reference
     * conflates the two: pkg/subscription/marshal.go:29-40).
     *
-    * Plan shape: one shuffle on the PK, ONE ascending sort; the
+    * Plan shape: ONE shuffle on the PK and ONE ascending sort, under
+    * one `Window` operator. Each key is projected once as a plain
+    * column (`_key<i>`) and every window partitions by those columns:
+    * partitioning by the `_img.<pk>` field expression instead makes
+    * Catalyst pull it out under a fresh alias per window, which hides
+    * the shared partitioning and costs one exchange per window. The
     * carry-forward (`last(_, ignoreNulls)` over a growing frame) and
-    * the keep-newest filter (row_number == count) share that sort.
+    * the keep-newest marker (no next row: `lead` is null) share that
+    * sort. PlanSpec asserts the single exchange.
     * Genuine NULLs survive because cells are wrapped in a struct
     * before the fill — only marked-unchanged cells are transparent.
     * Falls back to [[latestRows]] when the marker column is absent.
     */
   def latestRowsMerged(changelog: DataFrame, primaryKeys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types.StructType
+    requireKey(primaryKeys, "latestRowsMerged")
     if (!changelog.columns.contains(Envelope.UnchangedCol))
       return latestRows(changelog, primaryKeys)
-    val keyed = changelog.withColumn("_img", Envelope.afterOrBefore(changelog))
+    val keyNames = primaryKeys.indices.map(i => s"_key$i")
+    val img = Envelope.afterOrBefore(changelog)
+    val keyed = changelog.withColumn("_img", img)
+      .withColumns(keyNames.zip(primaryKeys.map(img.getField)).toMap)
     val imgType = keyed.schema("_img").dataType.asInstanceOf[StructType]
-    val keyCols = primaryKeys.map(k => col(s"_img.$k"))
-    val wAsc = Window.partitionBy(keyCols: _*)
+    val wAsc = Window.partitionBy(keyNames.map(col): _*)
       .orderBy(col(Envelope.TimestampCol).asc, col(Envelope.LsnCol).asc_nulls_first,
         col(Envelope.SequenceCol).asc_nulls_first)
     val wFill = wAsc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val unchanged = coalesce(col(Envelope.UnchangedCol),
       array().cast("array<string>"))
     val merged = imgType.fields.toIndexedSeq.map { f =>
-      if (primaryKeys.contains(f.name)) col(s"_img.${f.name}").as(f.name)
+      val key = primaryKeys.indexOf(f.name)
+      if (key >= 0) col(keyNames(key)).as(f.name)
       else {
         // null out marked cells (struct-wrapped so real NULLs stay
         // visible), then carry the last visible cell forward
@@ -89,14 +101,17 @@ object ChangelogOps {
       }
     }
     keyed
-      .withColumn("_rn", row_number().over(wAsc))
-      .withColumn("_n", count(lit(1)).over(
-        Window.partitionBy(keyCols: _*)))
-      .select(merged :+ col("_rn") :+ col("_n") :+ col(Envelope.OperationCol): _*)
-      .where(col("_rn") === col("_n") &&
-        col(Envelope.OperationCol) =!= Operation.Delete)
-      .drop("_rn", "_n", Envelope.OperationCol)
+      .select(merged :+ lead(lit(1), 1).over(wAsc).isNull.as("_newest") :+
+        col(Envelope.OperationCol): _*)
+      .where(col("_newest") && col(Envelope.OperationCol) =!= Operation.Delete)
+      .drop("_newest", Envelope.OperationCol)
   }
+
+  /** Without a key, `Window.partitionBy()` is one partition and the
+    * dedup would answer a single row for the whole table. */
+  private def requireKey(keys: Seq[_], op: String): Unit =
+    require(keys.nonEmpty, s"$op needs at least one primary-key column: " +
+      "a keyless table has no latest row per key")
 
   /** Per-transaction sequence numbers: each modification between a
     * Begin/Commit pair gets a monotonically increasing sequence so

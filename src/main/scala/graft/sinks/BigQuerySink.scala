@@ -63,21 +63,19 @@ final class BigQuerySink(dataset: String, transport: BigQueryTransport)
     handler.handle(schema)
 
   override def insert(table: TableSchema, batch: DataFrame): InsertResult = {
-    val cached = batch.cache()
-    val result = InsertResult.of(cached)
     val rawName = s"${table.name}_raw"
-    val json = cached.select(to_json(struct(
-      col(Envelope.TimestampCol), col(Envelope.LsnCol),
-      col(Envelope.OperationCol),
-      // deletes carry their final content in `before`
-      // (reference: pkg/sinks/bigquery/table.go:41)
-      Envelope.afterOrBefore(cached).as("payload"))).as("row"))
     val t = transport
-    json.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.hasNext) t.insertRows(rawName, rows.map(_.getString(0)))
+    InsertResult.observedWrite(batch) { observed =>
+      val json = observed.select(to_json(struct(
+        col(Envelope.TimestampCol), col(Envelope.LsnCol),
+        col(Envelope.OperationCol),
+        // deletes carry their final content in `before`
+        // (reference: pkg/sinks/bigquery/table.go:41)
+        Envelope.afterOrBefore(observed).as("payload"))).as("row"))
+      json.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+        if (rows.hasNext) t.insertRows(rawName, rows.map(_.getString(0)))
+      }
     }
-    cached.unpersist()
-    result
   }
 
   /** The reference's BigQuery sink predates truncate support; the

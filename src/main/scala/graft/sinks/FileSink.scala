@@ -23,18 +23,14 @@ final class FileSink(root: String) extends Sink {
   override def handleSchema(schema: TableSchema): SchemaOutcome =
     handler.handle(schema)
 
-  override def insert(table: TableSchema, batch: DataFrame): InsertResult = {
-    val result = InsertResult.of(batch.cache())
-    batch
+  override def insert(table: TableSchema, batch: DataFrame): InsertResult =
+    InsertResult.observedWrite(batch)(_
       .withColumn("namespace", lit(table.namespace))
       .withColumn("name", lit(table.name))
       .select("timestamp", "namespace", "name", "lsn", "sequence",
         "operation", "before", "after")
       .write.mode("append")
-      .json(s"$root/modifications/${table.ref.qualified}")
-    batch.unpersist()
-    result
-  }
+      .json(s"$root/modifications/${table.ref.qualified}"))
 
   /** Truncate events append to `root/truncates.jsonl` — a consumer
     * replaying the modification files applies each marker to its

@@ -1,7 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
-import graft.model.TableSchema
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions._
+import graft.model.{Envelope, TableSchema}
 
 /** Result of flushing one batch into a sink: row count + highest LSN
   * — the ack watermark the source confirms
@@ -23,11 +24,25 @@ object InsertResult {
   val empty: InsertResult = InsertResult(0, None)
 
   /** Compute the fold with one distributed aggregate (partial
-    * aggregation = the reference's per-inserter partial results). */
+    * aggregation = the reference's per-inserter partial results), for
+    * a sink whose write shuffles above the batch, where
+    * [[observedWrite]] would count in a shuffle map stage. */
   def of(batch: DataFrame): InsertResult = {
-    import org.apache.spark.sql.functions._
-    val row = batch.agg(count(lit(1)), max(col(graft.model.Envelope.LsnCol))).collect()(0)
+    val row = batch.agg(count(lit(1)), max(col(Envelope.LsnCol))).collect()(0)
     InsertResult(row.getLong(0), if (row.isNullAt(1)) None else Some(row.getLong(1)))
+  }
+
+  /** Run `write` over `batch` and return the fold, observed inside
+    * the write's own job: no cache, no pre-pass. The caller must
+    * write the observed frame from a result stage (no exchange above
+    * it), where Spark counts each partition's accumulator update
+    * once, so a retried task cannot count its rows twice; a node in a
+    * shuffle map stage could be re-run and counted again. */
+  def observedWrite(batch: DataFrame)(write: DataFrame => Unit): InsertResult = {
+    val fold = Observation()
+    write(batch.observe(fold, count(lit(1)).as("count"), max(col(Envelope.LsnCol)).as("lsn")))
+    val row = fold.get
+    InsertResult(row("count").asInstanceOf[Long], Option(row("lsn")).map(_.asInstanceOf[Long]))
   }
 }
 
@@ -53,13 +68,11 @@ trait Sink {
 
   /** Insert a batch whose fold result the caller already knows.
     * The ordered driver decode path holds every row of the flush
-    * epoch in memory to build `batch` — re-deriving (count, max LSN)
-    * with a distributed aggregate there costs one extra job plus a
-    * cache materialization per epoch (measured ~2x the epoch's write
-    * cost at 100k-frame epochs). Sinks that only need the fold for
+    * epoch in memory to build `batch`, so re-deriving (count, max
+    * LSN) there is redundant work. Sinks that only need the fold for
     * their return value can override to trust the caller's; the
-    * default ignores the hint and keeps the single-source-of-truth
-    * aggregate. The streaming pipeline passes a driver-held batch (a
+    * default ignores the hint and calls [[insert]], which derives the
+    * fold itself. The streaming pipeline passes a driver-held batch (a
     * `LocalRelation` under `coalesce(1)`), which a sink may write
     * without a Spark job, as the warehouse sink does. */
   def insertCounted(table: TableSchema, batch: DataFrame,

@@ -24,11 +24,13 @@ import graft.ops.ChangelogOps
   * - writes are append-only; replays are harmless because the view
   *   dedups by (pk, timestamp, lsn, sequence) — at-least-once
   *   delivery + merge-on-read, the reference's exact design.
-  * - imports ([[insert]]) append with a distributed Spark write; a
-  *   flush epoch's driver-held batch ([[insertCounted]]) and truncate
-  *   markers are written on the driver by Spark's parquet writer, one
-  *   file per `_date` directory, each under a hidden name and
-  *   published by one rename — no Spark job on the ack path.
+  * - imports ([[insert]]) append with one distributed Spark write,
+  *   which observes the batch's count and max lsn in its own job (no
+  *   cache, no count/max pre-pass); a flush epoch's driver-held batch
+  *   ([[insertCounted]]) and truncate markers are written on the
+  *   driver by Spark's parquet writer, one file per `_date`
+  *   directory, each under a hidden name and published by one rename
+  *   — no Spark job on the ack path.
   */
 final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
   private val handler = new SchemaHandler(_ => ())
@@ -39,12 +41,10 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
   override def handleSchema(schema: TableSchema): SchemaOutcome =
     handler.handle(schema)
 
-  override def insert(table: TableSchema, batch: DataFrame): InsertResult = {
-    val result = InsertResult.of(batch.cache())
-    write(table, laidOut(table, batch))
-    batch.unpersist()
-    result
-  }
+  /** The import insert: one distributed write, whose job also
+    * observes the batch's (count, max lsn) fold. */
+  override def insert(table: TableSchema, batch: DataFrame): InsertResult =
+    InsertResult.observedWrite(batch)(observed => write(table, laidOut(table, observed)))
 
   /** The flush-epoch insert: the caller's fold is trusted, so there is
     * no cache and no count/max pre-pass. A batch the driver holds (a

@@ -52,15 +52,7 @@ class DriverWriteSpec extends AnyFunSuite {
 
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
-  /** Spark jobs the calling thread starts inside `body`. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"driver-write-${System.nanoTime()}"
-    SparkJobs.groupsDuring(sc) {
-      sc.setJobGroup(group, "driver write probe")
-      try body finally sc.clearJobGroup()
-    }.count(_ == group)
-  }
+  private def jobsDuring(body: => Unit): Int = SparkJobs.startedBy(spark.sparkContext)(body)
 
   private def dateDirs(sink: WarehouseSink): Seq[java.io.File] =
     new java.io.File(sink.rawPath(lines)).listFiles()

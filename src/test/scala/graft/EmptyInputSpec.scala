@@ -186,4 +186,27 @@ class EmptyInputSpec extends AnyFunSuite {
         "semDedupProbed: 1 rows break the probe contract"), e.getMessage)
     }
   }
+
+  test("latest-state reads refuse a keyless table by name") {
+    import graft.model.{ColumnSpec, Operation, PgTypes, TableSchema}
+    import org.apache.spark.sql.Row
+    val keyless = TableSchema(1L, "public", "keyless", Seq(ColumnSpec("v", PgTypes.Int4)))
+    val sink = new graft.sinks.WarehouseSink(spark,
+      java.nio.file.Files.createTempDirectory("graft-keyless").toString)
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 00:00:00")
+    val rows = (1 to 5).map(i =>
+      Row(ts, Long.box(i.toLong), Long.box(1L), Operation.Insert, null, Row(Int.box(i))))
+    sink.insert(keyless, spark.createDataFrame(java.util.List.of(rows: _*),
+      Envelope.schemaFor(keyless.payloadStruct)))
+    assert(sink.raw(keyless).count() == 5)
+    // one partition over no key would answer a single row of the five
+    val e = intercept[IllegalArgumentException](sink.latestView(keyless))
+    assert(e.getMessage.contains("latestRowsMerged needs at least one primary-key column"),
+      e.getMessage)
+    val raw = sink.raw(keyless)
+    assert(intercept[IllegalArgumentException](ChangelogOps.latestRows(raw, Nil))
+      .getMessage.contains("latestRows needs"))
+    assert(intercept[IllegalArgumentException](ChangelogOps.latestRowView(raw, Nil))
+      .getMessage.contains("latestRowView needs"))
+  }
 }

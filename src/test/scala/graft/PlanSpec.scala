@@ -194,6 +194,40 @@ class PlanSpec extends AnyFunSuite {
       s"window dedup must shuffle exactly once:\n${planString(df)}")
   }
 
+  test("merged latest-state read: one PK exchange, also over baseline + tail") {
+    import graft.model.{ColumnSpec, Envelope, Operation, PgTypes, TableSchema}
+    import graft.sinks.{InsertResult, WarehouseSink}
+    import org.apache.spark.sql.Row
+    val lines = TableSchema(1L, "public", "lines", Seq(
+      ColumnSpec("order_id", PgTypes.Int8, key = true),
+      ColumnSpec("line", PgTypes.Int4, key = true),
+      ColumnSpec("note", PgTypes.Text)))
+    val schema = Envelope.schemaFor(lines.payloadStruct, withToastMarker = true)
+    def batch(lsn0: Long) = spark.createDataFrame(java.util.List.of((0 until 8).map { i =>
+      val img = Row(Int.box(i % 2), s"n$lsn0-$i", Long.box(i / 2L))
+      Row(java.sql.Timestamp.valueOf(s"2024-03-0${1 + i % 2} 00:00:00"), Long.box(lsn0 + i),
+        Long.box(1L), Operation.Update, img, img, if (i % 3 == 0) Seq("note") else null)
+    }: _*), schema)
+    val sink = new WarehouseSink(spark,
+      java.nio.file.Files.createTempDirectory("graft-plan-merged").toString)
+    // the window must partition by the projected keys, not re-extract
+    // them from the image per window spec (one exchange per window)
+    def assertOneExchange(df: DataFrame): Unit = {
+      val s = planString(df)
+      assert(shuffles(df) == 1 && "Exchange hashpartitioning\\(_key0#\\d+L?, _key1#".r
+        .findAllIn(s).size == 1, s"expected one PK exchange:\n$s")
+      // the newest-row marker and the TOAST fill share one Window (one sort)
+      assert("\\bWindow \\[".r.findAllIn(s).size == 1, s"expected one Window:\n$s")
+    }
+    sink.insertCounted(lines, batch(100L), InsertResult.empty)
+    assertOneExchange(sink.latestView(lines))
+    sink.compact(lines)
+    sink.insertCounted(lines, batch(200L), InsertResult.empty)
+    assertOneExchange(sink.latestView(lines))
+    assertOneExchange(sink.asOf(lines, java.sql.Timestamp.valueOf("2024-03-01 12:00:00")))
+    assert(sink.latestView(lines).count() == 8)
+  }
+
   test("dynamic partition pruning: a dim filter prunes fact partitions at runtime") {
     // the 100 TB shape: fact parquet partitioned on the join key's
     // directory column; a selective dimension filter must reach the

@@ -28,4 +28,13 @@ object SparkJobs {
     } finally sc.removeSparkListener(listener)
     scala.jdk.CollectionConverters.CollectionHasAsScala(groups).asScala.toSeq.map(_.orNull)
   }
+
+  /** Spark jobs the calling thread starts inside `body`. */
+  def startedBy(sc: SparkContext)(body: => Unit): Int = {
+    val group = s"jobs-probe-${System.nanoTime()}"
+    groupsDuring(sc) {
+      sc.setJobGroup(group, "job count probe")
+      try body finally sc.clearJobGroup()
+    }.count(_ == group)
+  }
 }
