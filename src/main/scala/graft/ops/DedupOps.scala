@@ -663,10 +663,6 @@ object DedupOps {
     aggregate(bitCols, lit(0L), (acc, b) => acc + b)
   }
 
-  /** Hamming distance between two simhashes (bit_count of xor). */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
   /** [[simhash]] as a table: (id, simhash) — the corpus-scale shape.
     * Identical semantics (distinct tokens, md5-prefix hash, per-bit
     * majority vote with ties set), but computed by exploding token

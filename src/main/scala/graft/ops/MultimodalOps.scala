@@ -480,37 +480,6 @@ object MultimodalOps {
     spark.createDataFrame(rdd, outSchema)
   }
 
-  /** Frame-sampling plan for video payloads: one output row per
-    * sampled frame with its byte offset — the downstream shape for
-    * per-frame feature extraction. */
-  def sampleFrames(
-      media: DataFrame,
-      decoder: MediaDecoder,
-      everyNth: Int): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", media.schema("media_id").dataType),
-      StructField("frame_index", IntegerType),
-      StructField("byte_offset", LongType)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val metaIdx = media.schema.fieldIndex("meta")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val meta = r.getStruct(metaIdx)
-        val isVideo = meta != null && meta.getString(0) == "video"
-        if (!isVideo) Iterator.empty
-        else {
-          val payload = r.getAs[Array[Byte]](payloadIdx)
-          decoder.frameOffsets(payload, everyNth).iterator.zipWithIndex.map {
-            case (off, idx) => Row(r.get(idIdx), idx, off)
-          }
-        }
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
-
   /** Resize/transcode plan: payload → transformed payload with
     * updated metadata, batched per partition like
     * [[extractFeatures]]. The stub decoder "resizes" by deterministic
@@ -543,14 +512,6 @@ object MultimodalOps {
     }
     spark.createDataFrame(rdd, schema)
   }
-
-  /** Declarative metadata checks that never touch the payload —
-    * filters like these must prune on column stats alone so a 100 TB
-    * media table is never materialised for a metadata query. */
-  def wellFormed(media: DataFrame): DataFrame =
-    media.where(
-      col("payload").isNotNull && length(col("payload")) > 0 &&
-        col("meta.kind").isin("image", "audio", "video"))
 
   /** dHash: the standard 64-bit difference perceptual hash. Decode,
     * bilinear-resize to 9×8 grayscale, emit one bit per horizontally
@@ -615,186 +576,6 @@ object MultimodalOps {
     }
     spark.createDataFrame(rdd, outSchema)
   }
-
-  /** 64-bit perceptual AUDIO fingerprint — the dHash recipe applied
-    * to the spectrogram, which is the Haitsma–Kalker (2002) robust-
-    * hash shape collapsed to one word per clip: decode to mono PCM,
-    * split into 8 time slices, FFT each slice (Hann window, radix-2),
-    * fold bin energies into 9 log-spaced bands on [300 Hz, min(2 kHz,
-    * 0.45·rate)], and take bit (t,b) = [E(t,b+1) > E(t,b)] — 8 slices
-    * × 8 adjacent-band signs = 64 bits.
-    *
-    * Sign-of-energy-difference makes the hash invariant to volume
-    * scaling (positive gain multiplies every band) and robust to
-    * small additive noise; re-encoding that preserves spectral shape
-    * preserves the hash. Undecodable payloads → None, never task
-    * failure. PCM is materialized per clip (capped at 2^21 samples ≈
-    * 4 min mono @ 8 kHz) — one clip per task at a time, the same
-    * bound every per-clip decoder in this file carries.
-    */
-  def audioFingerprint64(payload: Array[Byte]): Option[Long] = {
-    decodeMonoPcm(payload).flatMap { case (pcm, rate) =>
-      if (pcm.length == 0) None
-      else {
-        val slicesN = 8
-        val bandsN = 9
-        val fftN = 2048
-        val fLo = 300.0
-        val fHi = math.min(2000.0, 0.45 * rate)
-        val edges = Array.tabulate(bandsN + 1)(b =>
-          fLo * math.pow(fHi / fLo, b.toDouble / bandsN))
-        var bits = 0L
-        var t = 0
-        while (t < slicesN) {
-          val from = (t.toLong * pcm.length / slicesN).toInt
-          val until = ((t + 1).toLong * pcm.length / slicesN).toInt
-          val take = math.min(fftN, until - from)
-          val re = new Array[Double](fftN)
-          val im = new Array[Double](fftN)
-          var i = 0
-          while (i < take) {
-            // Hann over the taken span
-            val w = 0.5 * (1 - math.cos(2 * math.Pi * i / math.max(1, take - 1)))
-            re(i) = pcm(from + i) * w
-            i += 1
-          }
-          fftInPlace(re, im)
-          val e = new Array[Double](bandsN)
-          var k = 1
-          while (k < fftN / 2) {
-            val f = k.toDouble * rate / fftN
-            if (f >= fLo && f < fHi) {
-              var b = 0
-              while (b < bandsN && !(f >= edges(b) && f < edges(b + 1))) b += 1
-              if (b < bandsN) e(b) += re(k) * re(k) + im(k) * im(k)
-            }
-            k += 1
-          }
-          var b = 0
-          while (b < bandsN - 1) {
-            if (e(b + 1) > e(b)) bits |= 1L << (t * 8 + b)
-            b += 1
-          }
-          t += 1
-        }
-        Some(bits)
-      }
-    }
-  }
-
-  /** Decode any javax.sound-supported container to mono double PCM in
-    * [-1, 1] plus its sample rate; None when the payload isn't audio. */
-  private def decodeMonoPcm(payload: Array[Byte],
-      maxSamples: Int = 1 << 21): Option[(Array[Double], Float)] = {
-    if (payload == null || payload.isEmpty) return None
-    val in =
-      try {
-        val raw = javax.sound.sampled.AudioSystem.getAudioInputStream(
-          new java.io.BufferedInputStream(new java.io.ByteArrayInputStream(payload)))
-        val f = raw.getFormat
-        val target = new javax.sound.sampled.AudioFormat(
-          javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED,
-          f.getSampleRate, 16, f.getChannels, f.getChannels * 2,
-          f.getSampleRate, false)
-        Some(javax.sound.sampled.AudioSystem.getAudioInputStream(target, raw))
-      } catch {
-        case _: javax.sound.sampled.UnsupportedAudioFileException => None
-        case _: java.io.IOException => None
-      }
-    in.map { s =>
-      try {
-        val ch = s.getFormat.getChannels
-        val buf = new Array[Byte](8192)
-        val out = new scala.collection.mutable.ArrayBuffer[Double]()
-        var acc = 0.0
-        var inFrame = 0
-        var read = s.read(buf)
-        while (read > 0 && out.length < maxSamples) {
-          var i = 0
-          while (i + 1 < read) {
-            acc += ((buf(i + 1) << 8) | (buf(i) & 0xff)).toShort / 32768.0
-            inFrame += 1
-            if (inFrame == ch) { out += acc / ch; acc = 0.0; inFrame = 0 }
-            i += 2
-          }
-          read = s.read(buf)
-        }
-        (out.toArray, s.getFormat.getSampleRate)
-      } finally s.close()
-    }
-  }
-
-  /** Iterative radix-2 Cooley–Tukey FFT, in place. `re.length` must
-    * be a power of two. */
-  private def fftInPlace(re: Array[Double], im: Array[Double]): Unit = {
-    val n = re.length
-    var j = 0
-    var i = 0
-    while (i < n - 1) {
-      if (i < j) {
-        val tr = re(i); re(i) = re(j); re(j) = tr
-        val ti = im(i); im(i) = im(j); im(j) = ti
-      }
-      var m = n >> 1
-      while (m >= 1 && j >= m) { j -= m; m >>= 1 }
-      j += m
-      i += 1
-    }
-    var len = 2
-    while (len <= n) {
-      val ang = -2 * math.Pi / len
-      val wr = math.cos(ang)
-      val wi = math.sin(ang)
-      var base = 0
-      while (base < n) {
-        var cwr = 1.0
-        var cwi = 0.0
-        var k = 0
-        while (k < len / 2) {
-          val ur = re(base + k); val ui = im(base + k)
-          val xr = re(base + k + len / 2); val xi = im(base + k + len / 2)
-          val vr = xr * cwr - xi * cwi
-          val vi = xr * cwi + xi * cwr
-          re(base + k) = ur + vr; im(base + k) = ui + vi
-          re(base + k + len / 2) = ur - vr; im(base + k + len / 2) = ui - vi
-          val nwr = cwr * wr - cwi * wi
-          cwi = cwr * wi + cwi * wr
-          cwr = nwr
-          k += 1
-        }
-        base += len
-      }
-      len <<= 1
-    }
-  }
-
-  /** Per-clip audio fingerprints: (media_id, ahash NULLABLE) — same
-    * distributed shape as [[perceptualHashes]]; null marks payloads
-    * that didn't decode. */
-  def audioFingerprints(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    val outSchema = StructType(Seq(
-      StructField("media_id", media.schema("media_id").dataType),
-      StructField("ahash", LongType)))
-    val idIdx = media.schema.fieldIndex("media_id")
-    val payloadIdx = media.schema.fieldIndex("payload")
-    val rdd = media.rdd.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]](payloadIdx)
-        Row(r.get(idIdx), audioFingerprint64(payload).map(Long.box).orNull)
-      }
-    }
-    spark.createDataFrame(rdd, outSchema)
-  }
-
-  /** Near-duplicate audio pairs by banded spectrogram-dHash — same
-    * LSH machinery as [[nearDuplicateImages]] over
-    * [[audioFingerprint64]]. Returns (id_a, id_b, hamming). */
-  def nearDuplicateAudio(media: DataFrame, maxHamming: Int = 3,
-      bands: Int = 4): DataFrame =
-    bandedHammingPairs(
-      audioFingerprints(media).where(col("ahash").isNotNull), "ahash",
-      maxHamming, bands)
 
   /** Near-duplicate image pairs by banded dHash — the image twin of
     * SimHash text dedup. The 64-bit hash splits into `bands` equal
@@ -863,8 +644,8 @@ object MultimodalOps {
     bandedHammingPairs(hashes, hashCol, maxHamming,
       selfScalingBands(hashes.count()), failLimit)
 
-  /** The banded-Hamming LSH pair emitter shared by the image (dHash)
-    * and audio (spectrogram-dHash) near-dup operators: a pair
+  /** The banded-Hamming LSH pair emitter behind the image (dHash)
+    * near-dup operator and the declared hash-pair queries: a pair
     * collides iff some `64/bands`-bit slice matches exactly, then
     * codegen'd `bit_count(xor)` confirms the exact distance.
     * Pigeonhole guarantees every pair within `bands − 1` bits;

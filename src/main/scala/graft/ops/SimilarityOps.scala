@@ -1658,43 +1658,6 @@ object SimilarityOps {
     bucketedNeighborPairs(embeddings, idCol, vecCol, planes, minCosine)
   }
 
-  /** Materialises the SRP bucket as a PARTITION COLUMN of the
-    * embedding store — the physical scale path for ANN: a probe's
-    * bucket predicate then prunes directories before a single vector
-    * byte is read, turning each query from a corpus scan into a
-    * 1/2^planes slice (times probe width). Bucket assignment is the
-    * same pure column expression the in-memory path uses, so the
-    * layout and the query can never disagree.
-    *
-    * Stores carry a `_gen` generation column (0 for the initial
-    * write): the store is append-only with merge-on-read — the same
-    * semantics as the warehouse sink's raw table + latest view — so
-    * a daily embedding delta is [[appendSrpPartitioned]], never a
-    * rebuild. Generations must be distinct per append (latest-wins
-    * needs a total order per id).
-    */
-  def writeSrpPartitioned(embeddings: DataFrame, idCol: String,
-      vecCol: String, planes: Int, dims: Int, path: String): Unit =
-    stampedStore(embeddings, idCol, vecCol,
-      srpBucket(col(vecCol), planes, dims).as("bucket"), gen = 0L)
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
-
-  /** Appends a generation of vectors to an SRP-partitioned store:
-    * dynamic-partition append touches only the buckets the delta
-    * lands in; ids already present become upserts resolved at read
-    * (latest `_gen` wins). An update whose re-embedding moved it to
-    * a DIFFERENT bucket shadows the stale version only when the
-    * probe covers both buckets — the standard freshness/recall
-    * trade of partitioned ANN; [[compactSrpPartitioned]] restores
-    * exactness by folding the log.
-    */
-  def appendSrpPartitioned(delta: DataFrame, idCol: String,
-      vecCol: String, planes: Int, dims: Int, path: String,
-      gen: Long): Unit =
-    stampedStore(delta, idCol, vecCol,
-      srpBucket(col(vecCol), planes, dims).as("bucket"), gen)
-      .write.partitionBy("bucket").mode("append").parquet(path)
-
   private def stampedStore(df: DataFrame, idCol: String, vecCol: String,
       part: Column, gen: Long): DataFrame = {
     val stamped = df.select(col(idCol), col(vecCol), lit(gen).as("_gen"), part)
@@ -1711,42 +1674,27 @@ object SimilarityOps {
     stamped.repartition(col(stamped.columns.last))
   }
 
-  /** ANN top-k against an SRP-partitioned store written by
-    * [[writeSrpPartitioned]]: same probed-bucket semantics as
-    * [[annTopK]], but the bucket filter hits partition pruning
-    * (PartitionFilters in the scan) instead of a full read.
-    */
-  def annTopKPartitioned(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, vecCol: String,
-      query: Seq[Float], k: Int, planes: Int = 8,
-      probe: Int = 1): DataFrame = {
-    val q = lit(query.toArray)
-    val qBucket = srpBucketOf(query, planes)
-    val probed: Seq[Long] =
-      if (probe <= 0) Seq(qBucket)
-      else qBucket +: (0 until planes).map(j => qBucket ^ (1L << j))
-    latestVersions(spark.read.parquet(path)
-        .where(col("bucket").isin(probed: _*)), idCol, vecCol)
-      .select(col(idCol), round(cosine(col(vecCol), q), 6).as("cosine"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
-
   /** Merge-on-read over the probed slice: one id may carry several
     * generations after appends — keep the latest. The groupBy
-    * shuffles only the directory-pruned probe slice (bucket/cell
-    * filter runs first), never the store.
+    * shuffles only the directory-pruned probe slice (the cell filter
+    * runs first), never the store.
     */
   private def latestVersions(slice: DataFrame, idCol: String,
       vecCol: String): DataFrame =
     slice.groupBy(col(idCol))
       .agg(max_by(col(vecCol), col("_gen")).as(vecCol))
 
-  /** IVF twin of [[writeSrpPartitioned]]: the coarse-quantizer cell
-    * becomes the partition column, so a probe reads only its nprobe
-    * nearest cells' directories. Same literal-centroid assignment as
-    * the in-memory path — layout and query cannot disagree.
+  /** Materialises the coarse-quantizer cell as a PARTITION COLUMN of
+    * the embedding store, so a probe reads only its nprobe nearest
+    * cells' directories. Same literal-centroid assignment as the
+    * in-memory path — layout and query cannot disagree.
+    *
+    * Stores carry a `_gen` generation column (0 for the initial
+    * write): the store is append-only with merge-on-read — the same
+    * semantics as the warehouse sink's raw table + latest view — so
+    * a daily embedding delta is [[appendIvfPartitioned]], never a
+    * rebuild. Generations must be distinct per append (latest-wins
+    * needs a total order per id).
     */
   def writeIvfPartitioned(embeddings: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Seq[Float]], path: String): Unit =
@@ -1754,9 +1702,9 @@ object SimilarityOps {
       ivfAssign(col(vecCol), centroids).as("cell"), gen = 0L)
       .write.partitionBy("cell").mode("overwrite").parquet(path)
 
-  /** IVF twin of [[appendSrpPartitioned]]: a delta generation lands
-    * in its cells via dynamic-partition append; read resolves
-    * upserts latest-wins. Centroids stay FROZEN across appends
+  /** Appends a generation of vectors to a cell-partitioned store: the
+    * delta lands in its cells via dynamic-partition append; read
+    * resolves upserts latest-wins. Centroids stay FROZEN across appends
     * (standard IVF practice — retraining reassigns every cell, i.e.
     * is a rebuild); drift is absorbed by nprobe until the next
     * offline retrain + [[writeIvfPartitioned]].
@@ -1801,27 +1749,14 @@ object SimilarityOps {
   def compactIvfPartitioned(spark: org.apache.spark.sql.SparkSession,
       path: String, idCol: String, vecCol: String,
       centroids: Seq[Seq[Float]]): Unit =
-    compactStore(spark, path, idCol, vecCol,
-      v => ivfAssign(v, centroids).as("cell"), "cell")
-
-  /** SRP twin of [[compactIvfPartitioned]]. */
-  def compactSrpPartitioned(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, vecCol: String,
-      planes: Int, dims: Int): Unit =
-    compactStore(spark, path, idCol, vecCol,
-      v => srpBucket(v, planes, dims).as("bucket"), "bucket")
-
-  private def compactStore(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, vecCol: String,
-      part: Column => Column, partCol: String): Unit =
     rewriteStore(spark, path) { staging =>
       spark.read.parquet(path)
         .groupBy(col(idCol))
         .agg(max_by(struct(col(vecCol), col("_gen")), col("_gen")).as("_v"))
         .select(col(idCol), col("_v")(vecCol).as(vecCol),
           col("_v")("_gen").as("_gen"))
-        .withColumn(partCol, part(col(vecCol)))
-        .write.partitionBy(partCol).mode("overwrite").parquet(staging)
+        .withColumn("cell", ivfAssign(col(vecCol), centroids))
+        .write.partitionBy("cell").mode("overwrite").parquet(staging)
     }
 
   /** The append-only stores' compaction swap (ANN stores here, the

@@ -82,20 +82,14 @@ final class BigQuerySink(dataset: String, transport: BigQueryTransport)
     * append-only contract here records a marker row (operation
     * TRUNCATE, null payload) at the changelog position so a view with
     * truncate semantics — or an auditor — can apply it. The marker's
-    * timestamp renders ISO-8601 UTC — the same shape [[insert]]'s
-    * to_json emits under the engine's UTC session timezone
-    * (Timestamp.toString would write zone-less JVM-local wall time,
-    * leaving marker rows formatted unlike every data row) — and the
-    * full changelog position (lsn, sequence) rides along so the
-    * marker sorts against data rows by the same in-band key. */
+    * timestamp renders ISO-8601 UTC ([[JsonText.instant]]), the shape
+    * [[insert]]'s to_json emits, and the full changelog position
+    * (lsn, sequence) rides along so the marker sorts against data rows
+    * by the same in-band key. */
   override def truncate(table: TableSchema, at: java.sql.Timestamp,
       lsn: Option[Long], sequence: Option[Long]): Unit = {
-    val iso = java.time.format.DateTimeFormatter
-      .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(at.toInstant)
     transport.insertRows(s"${table.name}_raw", Iterator(
-      s"""{"timestamp":"$iso","lsn":${lsn.getOrElse("null")},""" +
+      s"""{"timestamp":"${JsonText.instant(at)}","lsn":${lsn.getOrElse("null")},""" +
         s""""sequence":${sequence.getOrElse("null")},""" +
         s""""operation":"${Operation.Truncate}","payload":null}"""))
   }

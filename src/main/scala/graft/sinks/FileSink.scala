@@ -23,25 +23,33 @@ final class FileSink(root: String) extends Sink {
   override def handleSchema(schema: TableSchema): SchemaOutcome =
     handler.handle(schema)
 
-  override def insert(table: TableSchema, batch: DataFrame): InsertResult =
+  /** CDC batches carry the unchanged-TOAST marker column (import
+    * batches do not); it is written when present, so a consumer can
+    * tell an unchanged TOAST cell from a NULL one. */
+  override def insert(table: TableSchema, batch: DataFrame): InsertResult = {
+    val cols = Seq("timestamp", "namespace", "name", "lsn", "sequence",
+      "operation", "before", "after") ++
+      Seq(Envelope.UnchangedCol).filter(batch.columns.contains)
     InsertResult.observedWrite(batch)(_
       .withColumn("namespace", lit(table.namespace))
       .withColumn("name", lit(table.name))
-      .select("timestamp", "namespace", "name", "lsn", "sequence",
-        "operation", "before", "after")
+      .select(cols.map(col): _*)
       .write.mode("append")
       .json(s"$root/modifications/${table.ref.qualified}"))
+  }
 
   /** Truncate events append to `root/truncates.jsonl` — a consumer
     * replaying the modification files applies each marker to its
-    * table's state at the recorded position. */
+    * table's state at the recorded position. The timestamp is written
+    * like the modification lines' (ISO-8601 UTC). */
   override def truncate(table: TableSchema, at: java.sql.Timestamp,
       lsn: Option[Long], sequence: Option[Long]): Unit = {
     new java.io.File(root).mkdirs()
     val w = new java.io.FileWriter(new java.io.File(root, "truncates.jsonl"), true)
     try w.write(
-      s"""{"namespace":"${table.namespace}","name":"${table.name}",""" +
-        s""""timestamp":"$at","lsn":${lsn.getOrElse("null")},""" +
+      s"""{"namespace":${JsonText.string(table.namespace)},""" +
+        s""""name":${JsonText.string(table.name)},""" +
+        s""""timestamp":"${JsonText.instant(at)}","lsn":${lsn.getOrElse("null")},""" +
         s""""sequence":${sequence.getOrElse("null")}}""" + "\n")
     finally w.close()
   }
@@ -51,8 +59,8 @@ final class FileSink(root: String) extends Sink {
     * (README.md:134-155 shape). */
   private def schemaJson(s: TableSchema): String = {
     val cols = s.columns.map { c =>
-      s"""{"name":"${c.name}","type":${c.pgOid},"key":${c.key},"modifier":${c.modifier}}"""
+      s"""{"name":${JsonText.string(c.name)},"type":${c.pgOid},"key":${c.key},"modifier":${c.modifier}}"""
     }.mkString("[", ",", "]")
-    s"""{"namespace":"${s.namespace}","name":"${s.name}","relation_id":${s.relationId},"fingerprint":"${s.fingerprint}","columns":$cols}"""
+    s"""{"namespace":${JsonText.string(s.namespace)},"name":${JsonText.string(s.name)},"relation_id":${s.relationId},"fingerprint":"${s.fingerprint}","columns":$cols}"""
   }
 }

@@ -9,7 +9,9 @@ import graft.model.{Envelope, TableSchema}
   * (reference: pkg/sinks/generic/inserter.go:42-66,
   * insert_result.go:19-96). Spark's synchronous `foreachBatch`
   * replaces the reference's promise tree: the fold is the implicit
-  * barrier at batch end.
+  * barrier at batch end. A sink computes it inside its own write job
+  * with [[InsertResult.observedWrite]], or takes it from the caller
+  * through [[Sink.insertCounted]].
   */
 final case class InsertResult(count: Long, lsn: Option[Long]) {
   /** Fold two results: counts add, LSNs max — associative, so any
@@ -22,15 +24,6 @@ final case class InsertResult(count: Long, lsn: Option[Long]) {
 
 object InsertResult {
   val empty: InsertResult = InsertResult(0, None)
-
-  /** Compute the fold with one distributed aggregate (partial
-    * aggregation = the reference's per-inserter partial results), for
-    * a sink whose write shuffles above the batch, where
-    * [[observedWrite]] would count in a shuffle map stage. */
-  def of(batch: DataFrame): InsertResult = {
-    val row = batch.agg(count(lit(1)), max(col(Envelope.LsnCol))).collect()(0)
-    InsertResult(row.getLong(0), if (row.isNullAt(1)) None else Some(row.getLong(1)))
-  }
 
   /** Run `write` over `batch` and return the fold, observed inside
     * the write's own job: no cache, no pre-pass. The caller must
@@ -85,4 +78,24 @@ trait Sink {
     * (timestamp, then lsn, then in-transaction sequence). */
   def truncate(table: TableSchema, at: java.sql.Timestamp,
       lsn: Option[Long], sequence: Option[Long]): Unit
+}
+
+/** JSON spellings for the lines sinks write by hand (truncate markers,
+  * schema logs), so they read like the lines Spark's JSON writer emits
+  * for data rows. */
+private[sinks] object JsonText {
+  private val IsoUtc = java.time.format.DateTimeFormatter
+    .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
+    .withZone(java.time.ZoneOffset.UTC)
+
+  /** ISO-8601 UTC, the shape Spark's JSON writer gives a timestamp
+    * under the engine's UTC session zone. `Timestamp.toString` would
+    * write zone-less JVM wall time instead. */
+  def instant(at: java.sql.Timestamp): String = IsoUtc.format(at.toInstant)
+
+  /** A quoted, escaped JSON string: quoted Postgres identifiers may
+    * hold `"` or `\`. */
+  def string(s: String): String =
+    "\"" + new String(com.fasterxml.jackson.core.io.JsonStringEncoder
+      .getInstance.quoteAsString(s)) + "\""
 }

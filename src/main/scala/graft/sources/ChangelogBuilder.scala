@@ -84,6 +84,12 @@ final class ChangelogBuilder {
   private var txnLsn: Option[Long] = None
   private var txnTime: Timestamp = new Timestamp(0)
   private var sequence = 0L
+  private var committed: Option[Long] = None
+
+  /** LSN of the last Commit decoded: the highest position whose
+    * transaction is whole in the output, so the one an ack may
+    * confirm. A batch that ends mid-transaction leaves it unchanged. */
+  def lastCommitLsn: Option[Long] = committed
 
   /** Known schema by qualified `namespace.name` — lets a consumer
     * resolve tables whose Schema entry arrived in an earlier batch
@@ -98,7 +104,8 @@ final class ChangelogBuilder {
         txnTime = micros2ts(PgOutput.toUnixMicros(tsMicros))
         sequence = 0L
         Nil
-      case _: PgOutput.Commit =>
+      case c: PgOutput.Commit =>
+        committed = Some(c.commitLsn)
         txnLsn = None
         Nil
       case r: PgOutput.Relation =>
@@ -191,7 +198,8 @@ object TextDecode {
     case Float4 => text.toFloat
     case Float8 | Numeric => text.toDouble
     case Date => java.sql.Date.valueOf(text)
-    case TsOid | Timestamptz | Time => parseTimestamp(text)
+    case TsOid | Time => parseTimestamp(text)
+    case Timestamptz => parseTimestamptz(text)
     case BoolArr | Int2Arr | Int4Arr | Int8Arr | TextArr | VarcharArr |
         Float4Arr | Float8Arr | NumericArr | DateArr | TimestampArr |
         TimestamptzArr =>
@@ -220,14 +228,28 @@ object TextDecode {
     hex.sliding(2, 2).map(Integer.parseInt(_, 16).toByte).toArray
   }
 
-  /** `2024-01-02 03:04:05.123456[+00]` or time-of-day `03:04:05` —
-    * the reference coerces all temporal types to time.Time; we coerce
-    * to java.sql.Timestamp (time-of-day on the epoch date). */
+  /** `2024-01-02 03:04:05.123456` or time-of-day `03:04:05` — the
+    * reference coerces all temporal types to time.Time; we coerce to
+    * java.sql.Timestamp (time-of-day on the epoch date), read as JVM
+    * wall time since the value names no zone. */
   private def parseTimestamp(s: String): java.sql.Timestamp = {
     val noTz = s.replaceAll("[+-]\\d\\d(:?\\d\\d)?$", "")
     val full = if (noTz.contains(" ") || noTz.contains("T")) noTz
       else s"1970-01-01 $noTz"
     java.sql.Timestamp.valueOf(full.replace('T', ' '))
+  }
+
+  /** `2024-01-02 03:04:05.123456+05:30` → the instant it names.
+    * Postgres prints timestamptz as wall time in the session zone plus
+    * that zone's UTC offset (`+hh`, `+hh:mm` or `+hh:mm:ss`); applying
+    * the offset makes the value independent of the JVM's zone and
+    * equal to what the JDBC import path reads for the same row. */
+  private def parseTimestamptz(s: String): java.sql.Timestamp = {
+    val at = math.max(s.lastIndexOf('+'), s.lastIndexOf('-'))
+    require(at > 10, s"timestamptz without a UTC offset: $s")
+    java.sql.Timestamp.from(java.time.LocalDateTime
+      .parse(s.substring(0, at).replace(' ', 'T'))
+      .toInstant(java.time.ZoneOffset.of(s.substring(at))))
   }
 
   /** Minimal Postgres array-literal parser: `{a,b,NULL,"c,d"}`. */

@@ -10,8 +10,8 @@ import graft.sinks.{InsertResult, Sink}
   *
   * The live stream runs through [[FrameStreamPipeline]]: one routed
   * streaming query decodes frames, inserts each table's rows through
-  * the [[Sink]], and confirms the epoch's max LSN here. That maps the
-  * reference's sink.Consume wiring (reference:
+  * the [[Sink]], and confirms the LSN of the last Commit it decoded
+  * here. That maps the reference's sink.Consume wiring (reference:
   * pkg/sinks/generic/sink.go:81-122 consume loop + flush ticker;
   * cmd/pgsink/cmd/app.go:340-346 ack hookup) onto Structured
   * Streaming: the trigger interval IS the flush epoch, foreachBatch

@@ -29,7 +29,7 @@ object FrameStreamPipeline {
     * create and tear down a pool every epoch, forever. The warehouse
     * sink writes each table's rows on its pool thread, with no Spark
     * job, so tables write their parquet in parallel. Sinks that write
-    * through Spark (file, JDBC, BigQuery) start one job per table from
+    * through Spark (file, BigQuery) start one job per table from
     * here; the cap bounds those jobs in flight, each one task (every
     * table's epoch batch is one partition, see processBatch), and the
     * driver-side row conversion. */
@@ -95,8 +95,10 @@ object FrameStreamPipeline {
 
   /** One flush epoch: decode the batch's frames in position order,
     * dispatch Schema entries to sink DDL, group modifications per
-    * table (the Router), append, and confirm the max LSN. */
-  private[streaming] def processBatch(
+    * table (the Router), append, and confirm the LSN of the last
+    * Commit decoded. Rows of a transaction whose Commit falls in a
+    * later epoch are written now but acked only with that epoch. */
+  private[graft] def processBatch(
       spark: SparkSession,
       batch: DataFrame,
       builder: ChangelogBuilder,
@@ -124,7 +126,6 @@ object FrameStreamPipeline {
     }
 
     val mods = entries.collect { case m: ChangelogBuilder.ModificationEntry => m }
-    var maxLsn: Option[Long] = None
     // Per-table inserts run CONCURRENTLY — the reference's per-table
     // async inserter (pkg/sinks buffered inserters, one per table).
     // The warehouse sink writes a table's driver-held rows on the
@@ -216,21 +217,19 @@ object FrameStreamPipeline {
           scala.concurrent.duration.Duration.Inf)
         settled.collectFirst { case scala.util.Failure(e) => e }
           .foreach(e => throw e)
-        maxLsn = settled.collect { case scala.util.Success(r) => r }
-          .flatMap(_.lsn).reduceOption(_ max _)
       }
     }
     // truncates are position-stamped markers: ordering against the
     // inserts above is carried by (timestamp, lsn, sequence), not by
-    // sink-call order, so recording them after the appends is safe —
-    // and a truncate-only transaction still advances the ack watermark
+    // sink-call order, so recording them after the appends is safe
     entries.foreach {
       case t: ChangelogBuilder.TruncateEntry =>
         sink.truncate(t.schema, t.timestamp, t.lsn, t.sequence)
-        maxLsn = (maxLsn ++ t.lsn).reduceOption(_ max _)
       case _ =>
     }
-    maxLsn.foreach(watermark.confirm)
+    // the ack covers only transactions whose Commit was decoded, so a
+    // truncate-only transaction advances it like any other
+    builder.lastCommitLsn.foreach(watermark.confirm)
     Some(collected.head.getLong(0)) // the epoch's first frame position
   }
 

@@ -195,6 +195,28 @@ class FrameStreamPipelineSpec extends AnyFunSuite {
     assert(sink.raw(pets).select("after.id").as[Long].collect().toSet == Set(1L, 2L))
   }
 
+  test("a batch ending mid-transaction does not ack it until its Commit is decoded") {
+    val sink = new WarehouseSink(spark, tmp())
+    val wm = new CdcPipeline.AckWatermark
+    val builder = new ChangelogBuilder
+    def epoch(from: Long, frames: Array[Byte]*): Unit =
+      FrameStreamPipeline.processBatch(spark,
+        frames.zipWithIndex.map { case (f, i) => (from + i, f) }
+          .toDF("position", "frame"),
+        builder, sink, wm)
+    // txn 50 commits; txn 100 is cut after Begin + 2 inserts
+    epoch(0L, encodeBegin(Begin(50L, 0L, 1L)), encodeRelation(rel),
+      ins(1L, "rex"), encodeCommit(Commit(0, 50L, 51L, 0L)),
+      encodeBegin(Begin(100L, 0L, 2L)), ins(2L, "whiskers"), ins(3L, "tom"))
+    assert(wm.position.contains(50L))
+    epoch(7L, ins(4L, "felix"), encodeCommit(Commit(0, 100L, 101L, 0L)))
+    assert(wm.position.contains(100L))
+    val pets = graft.model.TableSchema(1L, "public", "pets", Seq(
+      graft.model.ColumnSpec("id", PgTypes.Int8, key = true),
+      graft.model.ColumnSpec("name", PgTypes.Text)))
+    assert(sink.latestView(pets).count() == 4)
+  }
+
   test("retainLog drops segments behind the read position as epochs advance") {
     val frameDir = tmp(); val ckpt = tmp(); val wh = tmp()
     val sink = new WarehouseSink(spark, wh)

@@ -63,10 +63,6 @@ class LlmOpsSpec extends AnyFunSuite {
     val near = java.lang.Long.bitCount(hashes(1L) ^ hashes(2L))
     val far = java.lang.Long.bitCount(hashes(1L) ^ hashes(3L))
     assert(near < far)
-    // distributed hammingDistance column agrees with local bitCount
-    val viaCol = spark.range(1).select(
-      DedupOps.hammingDistance(lit(hashes(1L)), lit(hashes(2L)))).collect()(0).getInt(0)
-    assert(viaCol == near)
   }
 
   test("cosine top-k: self-similarity is 1.0 and ranks first") {
@@ -113,25 +109,6 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(pq.map(_._2).sliding(2).forall(p => p(0) >= p(1)))
     val recall = (exact intersect pq.map(_._1).toSet).size
     assert(recall >= 5, s"PQ recall too low: $recall/10")
-  }
-
-  test("SRP-partitioned ANN store: pruned read equals in-memory path") {
-    val dir = java.nio.file.Files.createTempDirectory("srp_store").toString
-    val query = embeddings.where($"vec_id" === 7)
-      .select($"embedding").collect()(0).getSeq[Float](0)
-    SimilarityOps.writeSrpPartitioned(
-      embeddings, "vec_id", "embedding", planes = 4, dims = query.length, dir)
-    val stored = SimilarityOps.annTopKPartitioned(
-      spark, dir, "vec_id", "embedding", query, 10, planes = 4, probe = 1)
-    val mem = SimilarityOps.annTopK(
-      embeddings, "vec_id", "embedding", query, 10, planes = 4, probe = 1)
-    assert(stored.as[(Long, Double)].collect().toSeq ==
-      mem.as[(Long, Double)].collect().toSeq,
-      "partitioned store must answer identically to the in-memory path")
-    // the bucket predicate prunes DIRECTORIES: partition filters in
-    // the scan, not a post-scan filter over all vectors
-    val scan = stored.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [bucket"), scan)
   }
 
   test("IVF top-k: probing nearest cells finds the query's own vector and real neighbors") {
@@ -314,34 +291,6 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(!fs.exists(p(dir + "_prev")))
   }
 
-  test("SRP store append keeps directory pruning and latest-wins reads") {
-    val dir = java.nio.file.Files.createTempDirectory("srp_upsert").toString + "/store"
-    val query = embeddings.where($"vec_id" === 7)
-      .select($"embedding").collect()(0).getSeq[Float](0)
-    val base = embeddings.where($"vec_id" % 2 === 0)
-    val delta = embeddings.where($"vec_id" % 2 === 1)
-    SimilarityOps.writeSrpPartitioned(
-      base, "vec_id", "embedding", planes = 4, dims = query.length, dir)
-    SimilarityOps.appendSrpPartitioned(
-      delta, "vec_id", "embedding", planes = 4, dims = query.length, dir, gen = 1L)
-    val stored = SimilarityOps.annTopKPartitioned(
-      spark, dir, "vec_id", "embedding", query, 10, planes = 4, probe = 1)
-    val mem = SimilarityOps.annTopK(
-      embeddings, "vec_id", "embedding", query, 10, planes = 4, probe = 1)
-    assert(stored.as[(Long, Double)].collect().toSeq ==
-      mem.as[(Long, Double)].collect().toSeq,
-      "base+delta store must answer like the in-memory path over the union")
-    val scan = stored.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters: [bucket"), scan)
-    // compaction is a no-op on distinct ids but must preserve answers
-    SimilarityOps.compactSrpPartitioned(
-      spark, dir, "vec_id", "embedding", planes = 4, dims = query.length)
-    val again = SimilarityOps.annTopKPartitioned(
-      spark, dir, "vec_id", "embedding", query, 10, planes = 4, probe = 1)
-    assert(again.as[(Long, Double)].collect().toSeq ==
-      mem.as[(Long, Double)].collect().toSeq)
-  }
-
   test("bucketed neighbor pairs never cross buckets and are cosine-filtered") {
     val pairs = SimilarityOps.bucketedNeighborPairs(
       embeddings, "vec_id", "embedding", planes = 2, minCosine = 0.5)
@@ -439,13 +388,8 @@ class LlmOpsSpec extends AnyFunSuite {
     val again = extractFeatures(media, decoder, batchSize = 2)
       .collect().map(r => r.getLong(0) -> r.getSeq[Float](2)).toMap
     assert(again == collected)
-    // frame sampling: only video rows, offsets every Nth byte
-    val frames = sampleFrames(media, decoder, everyNth = 20)
-    val f = frames.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    assert(f.forall(_._1 == 2L))
-    assert(f.map(_._3).toSeq == Seq(0L, 20L, 40L))
-    // metadata filter never touches payload
-    assert(wellFormed(media).count() == 2) // row 3 has empty payload
+    // frame offsets: every Nth byte of the payload
+    assert(decoder.frameOffsets(payload2, 20).toSeq == Seq(0L, 20L, 40L))
     // resize: payload decimated, metadata dims rewritten, schema kept
     val resized = resize(media, decoder, 4, 4)
     assert(resized.schema == media.schema)
@@ -587,63 +531,6 @@ class LlmOpsSpec extends AnyFunSuite {
     val back = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(out))
     assert(back.getWidth == 4 && back.getHeight == 2)
     assert((back.getRGB(0, 0) & 0xff0000) != 0 && (back.getRGB(3, 1) & 0xff) != 0)
-    // wellFormed stays declarative: prunes the corrupt-metadata shapes
-    // without decoding any payload
-    assert(wellFormed(media).count() == 3)
-  }
-
-  test("audio fingerprint: volume-invariant, noise-robust, distinct spectra far apart") {
-    import MultimodalOps._
-    def wav(tones: Seq[(Double, Double)], rate: Float = 8000f,
-        seconds: Double = 1.0): Array[Byte] = {
-      val nFrames = (rate * seconds).toInt
-      val pcm = new Array[Byte](nFrames * 2)
-      for (i <- 0 until nFrames) {
-        val x = tones.map { case (f, a) =>
-          a * math.sin(2 * math.Pi * f * i / rate) }.sum
-        val v = (math.max(-1.0, math.min(1.0, x)) * 32767).toInt
-        pcm(2 * i) = (v & 0xff).toByte
-        pcm(2 * i + 1) = ((v >> 8) & 0xff).toByte
-      }
-      val fmt = new javax.sound.sampled.AudioFormat(rate, 16, 1, true, false)
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(pcm), fmt, nFrames.toLong)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(
-        ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-      bos.toByteArray
-    }
-    // a harmonic ladder with a decreasing envelope: every analysis
-    // band holds real energy, so adjacent-band signs have margin
-    val ladder = (1 to 10).map(k => (200.0 * k, 0.5 / k))
-    val a = wav(ladder)
-    val scaled = wav(ladder.map { case (f, amp) => (f, amp * 0.4) })
-    val noisy = wav(ladder :+ (1234.0 -> 0.01))
-    val rising = wav((1 to 10).map(k => (200.0 * k, 0.05 * k)))
-
-    val ha = audioFingerprint64(a).get
-    assert(audioFingerprint64(scaled).get == ha,
-      "positive gain must not change any adjacent-band energy sign")
-    val noiseDist = java.lang.Long.bitCount(ha ^ audioFingerprint64(noisy).get)
-    assert(noiseDist <= 3, s"small additive noise moved $noiseDist bits")
-    val farDist = java.lang.Long.bitCount(ha ^ audioFingerprint64(rising).get)
-    assert(farDist > 10, s"opposite spectral slope only $farDist bits away")
-    assert(audioFingerprint64(Array[Byte](9, 9, 9)).isEmpty, "corrupt -> None")
-    assert(audioFingerprint64(null).isEmpty)
-
-    // distributed near-dup join: the noisy copy pairs with the
-    // original, the rising-slope clip pairs with nothing, corrupt
-    // payloads null out instead of failing the task
-    val rows = Seq(
-      Row(1L, a, Row("audio", null, null, 8000, 1000)),
-      Row(2L, noisy, Row("audio", null, null, 8000, 1000)),
-      Row(3L, rising, Row("audio", null, null, 8000, 1000)),
-      Row(4L, Array[Byte](1, 2, 3), Row("audio", null, null, null, null)))
-    val media = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows), mediaSchema())
-    val pairs = nearDuplicateAudio(media, maxHamming = 3)
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((1L, 2L)))
   }
 
   test("multimodal: AudioWavDecoder decodes a real WAV through the distributed plan") {
@@ -721,13 +608,6 @@ class LlmOpsSpec extends AnyFunSuite {
     // keyframe seek table resolved through stsc/stco/stsz, demuxer-style:
     // sync samples 1,4,7,10 -> chunk base + preceding in-chunk sizes
     assert(decoder.frameOffsets(mp4, 1).toSeq == Seq(28L, 88L, 238L, 478L))
-    // every 2nd keyframe through the distributed frame-sampling plan
-    // (the corrupt video row degrades to the stub byte stride — only
-    // the real container yields demuxer offsets)
-    val frames = sampleFrames(media, decoder, everyNth = 2)
-      .where(col("media_id") === 1L)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sortBy(_._2)
-    assert(frames.toSeq == Seq((1L, 0, 28L), (1L, 1, 238L)))
   }
 
   test("bpeTrain learns the hand-computed merge sequence; encoder agrees") {

@@ -70,6 +70,24 @@ class PgOutputSpec extends AnyFunSuite {
       TextDecode.decode(2950, "x")) // uuid rejected
   }
 
+  test("text decode: timestamptz applies its UTC offset, timestamp stays wall time") {
+    def instant(oid: Int, text: String) =
+      TextDecode.decode(oid, text).asInstanceOf[java.sql.Timestamp].toInstant
+    val utc = java.time.Instant.parse _
+    assert(instant(PgTypes.Timestamptz, "2024-01-02 03:04:05+05") ==
+      utc("2024-01-01T22:04:05Z"))
+    assert(instant(PgTypes.Timestamptz, "2024-01-02 03:04:05+05:30") ==
+      utc("2024-01-01T21:34:05Z"))
+    assert(instant(PgTypes.Timestamptz, "2024-01-02 03:04:05.123456+00") ==
+      utc("2024-01-02T03:04:05.123456Z"))
+    assert(TextDecode.decode(PgTypes.TimestamptzArr,
+        "{\"2024-01-02 03:04:05-02\",NULL}") ==
+      Seq(java.sql.Timestamp.from(utc("2024-01-02T05:04:05Z")), null))
+    // no zone on the wire: read as JVM wall time, as before
+    assert(TextDecode.decode(PgTypes.Timestamp, "2024-01-02 03:04:05.5") ==
+      java.sql.Timestamp.valueOf("2024-01-02 03:04:05.5"))
+  }
+
   test("changelog builder: schema precedes rows, commit ts + begin lsn stamped, sequence increments") {
     val tsMicros = 86400L * 1000000L // 2000-01-02 in pg time
     val messages = Iterator[Message](

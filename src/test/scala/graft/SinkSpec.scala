@@ -79,6 +79,18 @@ class SinkSpec extends AnyFunSuite {
     val schemaLines = Files.readAllLines(
       java.nio.file.Paths.get(root, "schemas.jsonl"))
     assert(schemaLines.size == 1 && schemaLines.get(0).contains("\"one\""))
+    // an unchanged-TOAST cell stays marked, not a bare NULL
+    val payload = StructType(Seq(
+      StructField("id", LongType), StructField("msg", StringType)))
+    val toasted = spark.createDataFrame(
+      java.util.Arrays.asList(org.apache.spark.sql.Row(
+        java.sql.Timestamp.valueOf("2024-01-01 00:00:02"), 12L, 1L, "UPDATE",
+        null, org.apache.spark.sql.Row(1L, null), Seq("msg"))),
+      Envelope.schemaFor(payload, withToastMarker = true))
+    assert(sink.insert(oneSchema, toasted) == InsertResult(1, Some(12L)))
+    val marked = spark.read.json(s"$root/modifications/public.one")
+      .where($"lsn" === 12L).select($"unchanged_toast").first()
+    assert(marked.getSeq[String](0) == Seq("msg"))
   }
 
   test("WarehouseSink: append-only raw + latest view; replay is harmless (at-least-once)") {
