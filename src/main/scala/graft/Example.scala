@@ -18,9 +18,11 @@ object Example {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = java.nio.file.Files.createTempDirectory("graft-example").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-example")
+    // the engine's session posture (SessionDefaults: AQE, UTC, local
+    // checkpoint writes), then the demo's own explicit settings
+    val spark = SessionDefaults(SparkSession.builder()
+        .master("local[4]")
+        .appName("graft-example"), cores = 4)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -33,6 +33,12 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session timezone: the engine's timestamp-ownership
   *    contract (ImportSource.normalizeTimestamps) assumes one
   *    canonical zone end to end.
+  *  - Checkpoint files on local disk through
+  *    [[graft.streaming.LocalCheckpointFileManager]]: Spark's default
+  *    manager launches ~20 `chmod`/`readlink` processes per flush
+  *    epoch's offsets + commits writes when Hadoop's native library is
+  *    absent (it is, in Spark's distribution). Non-local paths keep
+  *    Spark's own choice.
   *
   * `SessionDefaults(builder)` applies them; every knob still yields
   * to an explicit later `.config(...)` on the same builder, and
@@ -54,4 +60,6 @@ object SessionDefaults {
       .config("spark.buffer.pageSize", "4m")
       .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
       .config("spark.sql.files.openCostInBytes", openCostInBytes)
+      .config(graft.streaming.LocalCheckpointFileManager.ConfKey,
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
 }

@@ -71,7 +71,8 @@ final class BigQuerySink(dataset: String, transport: BigQueryTransport)
         col(Envelope.OperationCol),
         // deletes carry their final content in `before`
         // (reference: pkg/sinks/bigquery/table.go:41)
-        Envelope.afterOrBefore(observed).as("payload"))).as("row"))
+        Envelope.afterOrBefore(observed).as("payload")),
+        Map("timestampFormat" -> JsonText.TimestampFormat)).as("row"))
       json.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         if (rows.hasNext) t.insertRows(rawName, rows.map(_.getString(0)))
       }

@@ -35,6 +35,7 @@ final class FileSink(root: String) extends Sink {
       .withColumn("name", lit(table.name))
       .select(cols.map(col): _*)
       .write.mode("append")
+      .option("timestampFormat", JsonText.TimestampFormat)
       .json(s"$root/modifications/${table.ref.qualified}"))
   }
 

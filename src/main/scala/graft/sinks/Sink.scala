@@ -84,13 +84,19 @@ trait Sink {
   * schema logs), so they read like the lines Spark's JSON writer emits
   * for data rows. */
 private[sinks] object JsonText {
+  /** ISO-8601 with microseconds, the changelog's timestamp precision:
+    * Spark's JSON default (`…ss.SSSXXX`) would tie two commits within
+    * one millisecond. Passed as `timestampFormat` to the sinks' Spark
+    * JSON writers too. */
+  val TimestampFormat = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
+
   private val IsoUtc = java.time.format.DateTimeFormatter
-    .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")
+    .ofPattern(TimestampFormat)
     .withZone(java.time.ZoneOffset.UTC)
 
-  /** ISO-8601 UTC, the shape Spark's JSON writer gives a timestamp
-    * under the engine's UTC session zone. `Timestamp.toString` would
-    * write zone-less JVM wall time instead. */
+  /** ISO-8601 UTC, the shape the sinks' Spark JSON writers give a
+    * timestamp under the engine's UTC session zone.
+    * `Timestamp.toString` would write zone-less JVM wall time instead. */
   def instant(at: java.sql.Timestamp): String = IsoUtc.format(at.toInstant)
 
   /** A quoted, escaped JSON string: quoted Postgres identifiers may

@@ -228,12 +228,17 @@ object TextDecode {
     hex.sliding(2, 2).map(Integer.parseInt(_, 16).toByte).toArray
   }
 
+  /** A trailing `+hh`/`-hh`/`+hhmm`/`+hh:mm` offset, compiled once:
+    * `String.replaceAll` would compile it again for every cell. */
+  private val TrailingOffset =
+    java.util.regex.Pattern.compile("[+-]\\d\\d(:?\\d\\d)?$")
+
   /** `2024-01-02 03:04:05.123456` or time-of-day `03:04:05` — the
     * reference coerces all temporal types to time.Time; we coerce to
     * java.sql.Timestamp (time-of-day on the epoch date), read as JVM
     * wall time since the value names no zone. */
   private def parseTimestamp(s: String): java.sql.Timestamp = {
-    val noTz = s.replaceAll("[+-]\\d\\d(:?\\d\\d)?$", "")
+    val noTz = TrailingOffset.matcher(s).replaceFirst("")
     val full = if (noTz.contains(" ") || noTz.contains("T")) noTz
       else s"1970-01-01 $noTz"
     java.sql.Timestamp.valueOf(full.replace('T', ' '))

@@ -18,7 +18,11 @@ import graft.sources.{ChangelogBuilder, PgOutput}
   * Sequence, BuildChangelog, router, sink (cmd/pgsink/cmd/app.go:
   * 340-346) — collapsed onto Structured Streaming's micro-batch
   * clock: trigger = flush interval, foreachBatch = flush epoch,
-  * checkpoint commit + AckWatermark = Confirm.
+  * checkpoint commit + AckWatermark = Confirm. The commit is one
+  * offsets file before the batch and one commits file after it; on a
+  * local checkpoint a session built through [[graft.SessionDefaults]]
+  * writes both with [[LocalCheckpointFileManager]], which launches no
+  * process per file, where Spark's default manager runs ~20 per epoch.
   */
 object FrameStreamPipeline {
 

@@ -177,6 +177,9 @@ class BigQueryMappingSpec extends AnyFunSuite {
       j.contains(""""operation":"DELETE"""") && j.contains(""""id":2""")))
     assert(byOp.exists(j =>
       j.contains(""""operation":"INSERT"""") && j.contains(""""msg":"one"""")))
+    // to_json keeps the commit timestamp's microseconds
+    assert(byOp.forall(_.matches(
+      """.*"timestamp":"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{6}Z".*""")), byOp)
 
     sink.truncate(example, java.sql.Timestamp.valueOf("2024-06-01 00:00:02"),
       Some(13L), Some(1L))
@@ -186,7 +189,7 @@ class BigQueryMappingSpec extends AnyFunSuite {
     // to_json emits under the UTC session timezone), and the full
     // (lsn, sequence) position must ride along
     assert(last.matches(
-      """.*"timestamp":"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{3}Z".*"""),
+      """.*"timestamp":"\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}\.\d{6}Z".*"""),
       s"marker timestamp not ISO-8601 UTC: $last")
     assert(last.contains(""""lsn":13""") && last.contains(""""sequence":1"""))
   }

@@ -168,6 +168,36 @@ class FrameStreamPipelineSpec extends AnyFunSuite {
     assert(wm.position.contains(400L))
   }
 
+  test("flush epochs commit their checkpoint without launching a process") {
+    val frameDir = tmp(); val ckpt = tmp(); val wh = tmp()
+    val sink = new WarehouseSink(spark, wh)
+    val wm = new CdcPipeline.AckWatermark
+    // three 4-frame transactions; maxFramesPerTrigger=4 makes each
+    // one flush epoch, so the checkpoint commits three times
+    PgOutputFrameLog.append(frameDir, "seg-000", (1L to 3L).flatMap(i =>
+      Seq(encodeBegin(Begin(100L * i, 0L, i)), encodeRelation(rel),
+        ins(i, s"pet$i"), encodeCommit(Commit(0, 100L * i, 100L * i + 1, 0L)))))
+    var q: org.apache.spark.sql.streaming.StreamingQuery = null
+    val launched = ProcessLaunches.during {
+      q = FrameStreamPipeline.start(spark, frameDir, sink, wm, ckpt,
+        "100 milliseconds", maxFramesPerTrigger = Some(4L))
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(q.recentProgress.count(_.numInputRows > 0) == 3)
+    assert(wm.position.contains(300L))
+    // Spark's default manager runs chmod + readlink for each offsets
+    // and commits file (~20 launches per epoch without Hadoop's
+    // native library)
+    val underCheckpoint = launched.filter(c =>
+      c.endsWith(ckpt) || c.contains(ckpt + java.io.File.separator))
+    assert(underCheckpoint.isEmpty, underCheckpoint.take(5))
+    for (log <- Seq("offsets", "commits")) {
+      val names = new java.io.File(ckpt, log).list().toSet
+      assert(Set("0", "1", "2").subsetOf(names), s"$log: $names")
+      assert(!names.exists(_.endsWith(".crc")), s"$log: $names")
+    }
+  }
+
   test("a truncate-only transaction still advances the ack watermark") {
     val frameDir = tmp(); val ckpt = tmp(); val wh = tmp()
     val sink = new WarehouseSink(spark, wh)

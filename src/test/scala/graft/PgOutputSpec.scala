@@ -88,6 +88,21 @@ class PgOutputSpec extends AnyFunSuite {
       java.sql.Timestamp.valueOf("2024-01-02 03:04:05.5"))
   }
 
+  test("text decode: time and timestamp keep microseconds and drop a trailing offset") {
+    def ts(oid: Int, text: String) =
+      TextDecode.decode(oid, text).asInstanceOf[java.sql.Timestamp]
+    assert(ts(PgTypes.Time, "03:04:05") ==
+      java.sql.Timestamp.valueOf("1970-01-01 03:04:05"))
+    val micros = ts(PgTypes.Timestamp, "2024-01-02 03:04:05.123456")
+    assert(micros == java.sql.Timestamp.valueOf("2024-01-02 03:04:05.123456"))
+    assert(micros.getNanos == 123456000)
+    // a zone-less type reads wall time: an offset on its text is dropped
+    assert(ts(PgTypes.Timestamp, "2024-01-02 03:04:05+05") ==
+      java.sql.Timestamp.valueOf("2024-01-02 03:04:05"))
+    assert(ts(PgTypes.Time, "03:04:05.25-07:30") ==
+      java.sql.Timestamp.valueOf("1970-01-01 03:04:05.25"))
+  }
+
   test("changelog builder: schema precedes rows, commit ts + begin lsn stamped, sequence increments") {
     val tsMicros = 86400L * 1000000L // 2000-01-02 in pg time
     val messages = Iterator[Message](

@@ -18,6 +18,8 @@ class SessionDefaultsSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.files.maxPartitionBytes") == "1m")
     assert(spark.conf.get("spark.sql.files.openCostInBytes") == "64k")
     assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") ==
+      "graft.streaming.LocalCheckpointFileManager")
   }
 
   test("later explicit config wins over the defaults (builder is fluent)") {
@@ -41,7 +43,8 @@ class SessionDefaultsSpec extends AnyFunSuite {
       "spark.sql.adaptive.coalescePartitions.enabled",
       "spark.sql.session.timeZone",
       "spark.sql.files.maxPartitionBytes",
-      "spark.sql.files.openCostInBytes")
+      "spark.sql.files.openCostInBytes",
+      "spark.sql.streaming.checkpointFileManagerClass")
     val before = touched.map(k => k -> spark.conf.get(k))
     try {
       val s2 = b.getOrCreate()

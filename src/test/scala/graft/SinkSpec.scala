@@ -91,6 +91,22 @@ class SinkSpec extends AnyFunSuite {
     val marked = spark.read.json(s"$root/modifications/public.one")
       .where($"lsn" === 12L).select($"unchanged_toast").first()
     assert(marked.getSeq[String](0) == Seq("msg"))
+    // commit timestamps keep their microseconds: two commits 1 µs
+    // apart read back as distinct instants
+    sink.insert(oneSchema, envelopes(
+      ("2024-01-01 00:00:03.000001", Some(13L), Some(1L), "UPDATE", 1L, "a"),
+      ("2024-01-01 00:00:03.000002", Some(14L), Some(1L), "UPDATE", 1L, "b")))
+    val close = spark.read.json(s"$root/modifications/public.one")
+      .where($"lsn" >= 13L).orderBy($"lsn")
+    val commits = Seq("2024-01-01 00:00:03.000001", "2024-01-01 00:00:03.000002")
+      .map(java.sql.Timestamp.valueOf(_).toInstant)
+    // ISO-8601 UTC with six fractional digits, like Instant.toString
+    // prints a whole-microsecond instant
+    assert(close.select($"timestamp").as[String].collect().toSeq ==
+      commits.map(_.toString))
+    val readBack = close.select(to_timestamp($"timestamp")).collect()
+      .map(_.getTimestamp(0).toInstant).toSeq
+    assert(readBack == commits && readBack.distinct.size == 2)
   }
 
   test("WarehouseSink: append-only raw + latest view; replay is harmless (at-least-once)") {

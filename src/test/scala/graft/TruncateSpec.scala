@@ -142,10 +142,10 @@ class TruncateSpec extends AnyFunSuite {
     assert(lines.get(0).contains(""""name":"pets""""))
     assert(lines.get(0).contains(""""lsn":42"""))
     assert(lines.get(0).contains(""""sequence":7"""))
-    // the marker's timestamp reads back as the same instant, in the
-    // ISO-8601 UTC shape of the modification lines; a quoted
-    // identifier holding `"` still yields valid JSON
-    val at = java.sql.Timestamp.from(java.time.Instant.parse("2024-05-06T07:08:09.123Z"))
+    // the marker's timestamp reads back as the same instant, to the
+    // microsecond, in the ISO-8601 UTC shape of the modification
+    // lines; a quoted identifier holding `"` still yields valid JSON
+    val at = java.sql.Timestamp.from(java.time.Instant.parse("2024-05-06T07:08:09.123456Z"))
     sink.truncate(petsTable.copy(namespace = "my\"ns", name = "pe\"ts"),
       at, Some(43L), Some(1L))
     val read = spark.read.json(s"$root/truncates.jsonl")
@@ -154,7 +154,7 @@ class TruncateSpec extends AnyFunSuite {
     assert(marker.length == 1)
     assert(marker(0).getAs[String]("namespace") == "my\"ns" &&
       marker(0).getAs[String]("name") == "pe\"ts")
-    assert(marker(0).getAs[String]("timestamp") == "2024-05-06T07:08:09.123Z")
+    assert(marker(0).getAs[String]("timestamp") == "2024-05-06T07:08:09.123456Z")
     assert(read.where($"lsn" === 43L)
       .select(org.apache.spark.sql.functions.to_timestamp($"timestamp"))
       .first().getTimestamp(0).toInstant == at.toInstant)
