@@ -76,6 +76,7 @@ final class WarehouseSink(spark: SparkSession, root: String) extends Sink {
   private def write(table: TableSchema, rows: DataFrame): Unit =
     rows.sortWithinPartitions(("_date" +: pkCols(table)).map(col): _*)
       .write.mode("append")
+      .options(Bridge.localWriteOptions(spark, rawPath(table)))
       .partitionBy("_date")
       .parquet(rawPath(table))
 

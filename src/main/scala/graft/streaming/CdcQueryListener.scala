@@ -13,6 +13,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * the last progress's whole phase breakdown (`triggerExecution`,
   * `addBatch`, `latestOffset`, `walCommit`, ...), Structured
   * Streaming's own per-epoch attribution.
+  *
+  * `rows` and `lastBatchRows` are the progress's `numInputRows`, which
+  * Spark takes from the source scan's `numOutputRows` metric. A
+  * [[FrameStreamPipeline]] epoch runs no scan job: it reads its frames
+  * on the driver and adds their count to that metric, so these are
+  * the frames each epoch decoded.
   */
 final class CdcQueryListener extends StreamingQueryListener {
 

@@ -5,7 +5,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 import graft.model.{Envelope, TableSchema}
 import graft.sinks.{InsertResult, Sink}
-import graft.sources.{ChangelogBuilder, PgOutput}
+import graft.sources.{ChangelogBuilder, FrameRange, PgOutput, PgOutputFrameLog}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The complete streaming CDC lifecycle (SURVEY §3.1) on Spark:
   * frame source → ordered decode → route per table → sink insert →
@@ -23,6 +24,17 @@ import graft.sources.{ChangelogBuilder, PgOutput}
   * local checkpoint a session built through [[graft.SessionDefaults]]
   * writes both with [[LocalCheckpointFileManager]], which launches no
   * process per file, where Spark's default manager runs ~20 per epoch.
+  *
+  * A flush epoch starts no Spark job of its own. Its frames are read
+  * on the driver (`Bridge.readMicroBatch`): the `foreachBatch` plan
+  * names the epoch's [[graft.sources.FrameRange]]s, which
+  * `PgOutputFrameLog.readRange` reads, and the frame count is added
+  * to the query's `MicroBatchScanExec` `numOutputRows` metric, the one
+  * Spark's progress reports as `numInputRows` (so [[CdcQueryListener]]
+  * counts true rows). When the plan does not have that shape, the
+  * epoch falls back to collecting the batch through one Spark job.
+  * The warehouse sink writes its parquet on the driver too, with no
+  * process per file.
   */
 object FrameStreamPipeline {
 
@@ -108,18 +120,27 @@ object FrameStreamPipeline {
       builder: ChangelogBuilder,
       sink: Sink,
       watermark: CdcPipeline.AckWatermark): Option[Long] = {
-    // the driver-side collect here is bounded by the source's
-    // admission control (maxFramesPerTrigger, default 5000 — see
-    // PgOutputFrameSource), not by backlog size: a restart against a
-    // large frame log drains in bounded micro-batches. The position
-    // sort happens on the driver — a distributed orderBy before a
-    // full collect pays a range-sampling job plus a sort exchange per
-    // flush epoch for an array the driver re-materializes anyway.
-    val collected = batch.select("position", "frame").collect()
-      .sortBy(_.getLong(0))
-    val frames = collected.map(_.getAs[Array[Byte]]("frame"))
+    // The epoch's FrameRanges are read on the driver, from the log
+    // the driver already reads and retains, with no Spark job; their
+    // frame count goes into the scan's numOutputRows, where progress
+    // reads numInputRows. A batch of any other shape (a test's toDF
+    // batch, a Spark whose plan shape moved) is collected through one
+    // Spark job instead. Either way the read is bounded by the
+    // source's admission control (maxFramesPerTrigger, default 5000 —
+    // see PgOutputFrameSource), not by backlog size: a restart against
+    // a large frame log drains in bounded micro-batches. The position
+    // sort happens on the driver — a distributed orderBy before a full
+    // collect pays a range-sampling job plus a sort exchange per flush
+    // epoch for an array the driver re-materializes anyway.
+    val frames = Bridge.readMicroBatch(spark, batch) {
+      case r: FrameRange =>
+        PgOutputFrameLog.readRange(r.path, r.start, r.end).toSeq
+          .zipWithIndex.map { case (f, i) => (r.start + i, f) }
+    }.getOrElse(batch.select("position", "frame").collect().toSeq
+      .map(r => (r.getLong(0), r.getAs[Array[Byte]](1))))
+      .sortBy(_._1)
     if (frames.isEmpty) return None
-    val entries = builder.push(frames.iterator.map(PgOutput.decode)).toVector
+    val entries = builder.push(frames.iterator.map(f => PgOutput.decode(f._2))).toVector
 
     val schemas = scala.collection.mutable.Map.empty[String, TableSchema]
     entries.foreach {
@@ -234,7 +255,7 @@ object FrameStreamPipeline {
     // the ack covers only transactions whose Commit was decoded, so a
     // truncate-only transaction advances it like any other
     builder.lastCommitLsn.foreach(watermark.confirm)
-    Some(collected.head.getLong(0)) // the epoch's first frame position
+    Some(frames.head._1) // the epoch's first frame position
   }
 
   private def imageRow(payload: StructType, m: Option[Map[String, Any]]): Row =

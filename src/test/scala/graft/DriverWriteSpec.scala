@@ -1,8 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graftbridge.NioLocalFileSystem
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.{ColumnSpec, Envelope, Operation, PgTypes, TableSchema}
@@ -120,5 +124,80 @@ class DriverWriteSpec extends AnyFunSuite {
     assert(sink.vacuum(lines, java.sql.Date.valueOf("2024-03-03")) == 1L)
     assert(!torn.exists())
     assert(sorted(sink.latestView(lines)) == afterNext)
+  }
+
+  /** The permissions of each kind of entry under `dirs` and their files. */
+  private def permissions(dirs: Seq[java.io.File]): Map[String, Set[String]] =
+    dirs.flatMap(dir => (dir +: dir.listFiles().toSeq).map { f =>
+      val kind = if (f.isDirectory) "dir" else if (f.getName.endsWith(".crc")) "crc" else "data"
+      kind -> PosixFilePermissions.toString(Files.getPosixFilePermissions(f.toPath))
+    }).groupBy(_._1).map { case (kind, ps) => kind -> ps.map(_._2).toSet }
+
+  test("warehouse writes keep Hadoop's permissions and checksums, with no process launched") {
+    val rows = envelopes(4, Seq("2024-03-01", "2024-03-02"))
+    val distributed = new WarehouseSink(spark, tmp())
+    val driver = new WarehouseSink(spark, tmp())
+    // the import's Spark write and the flush epoch's driver write
+    val launched = ProcessLaunches.during {
+      distributed.insert(lines, frame(rows))
+      driver.insertCounted(lines, frame(rows).coalesce(1), known(rows))
+    }
+    assert(launched.isEmpty, launched.take(5))
+    // the bits Hadoop's LocalFileSystem gives under the conf's umask
+    val conf = spark.sessionState.newHadoopConf()
+    val umask = FsPermission.getUMask(conf)
+    val expected = Map(
+      "dir" -> Set(FsPermission.getDirDefault.applyUMask(umask).toString),
+      "data" -> Set(FsPermission.getFileDefault.applyUMask(umask).toString),
+      "crc" -> Set(FsPermission.getFileDefault.applyUMask(umask).toString))
+    assert(permissions(dateDirs(driver)) == expected)
+    assert(permissions(dateDirs(distributed)) == expected)
+
+    // every data file reads back through Hadoop's LocalFileSystem
+    // with its checksum verified
+    val verifying = new LocalFileSystem
+    try {
+      verifying.initialize(new java.net.URI("file:///"), conf)
+      verifying.setVerifyChecksum(true)
+      for (dir <- dateDirs(driver) ++ dateDirs(distributed);
+           f <- dir.listFiles() if !f.getName.endsWith(".crc")) {
+        assert(new java.io.File(dir, s".${f.getName}.crc").isFile, f)
+        val in = verifying.open(new Path(f.toURI))
+        try assert(in.readAllBytes().sameElements(Files.readAllBytes(f.toPath)), f)
+        finally in.close()
+      }
+    } finally verifying.close()
+    assert(sorted(driver.raw(lines)) == sorted(distributed.raw(lines)))
+
+    // the write's filesystem stayed in its own conf: the session's
+    // cached local filesystem is still the one the classpath registers
+    val cached = new Path(driver.rawPath(lines)).getFileSystem(conf)
+    assert(cached eq FileSystem.get(new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration))
+    assert(!cached.isInstanceOf[NioLocalFileSystem])
+    val fresh = FileSystem.newInstance(new java.net.URI("file:///"), conf)
+    try assert(cached.getClass == fresh.getClass) finally fresh.close()
+  }
+
+  test("the nio local filesystem sets the permission bits Hadoop's chmod sets") {
+    // a umask other than the default 022, so bits that ignored the
+    // requested permission would show
+    val conf = new org.apache.hadoop.conf.Configuration(spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.permissions.umask-mode", "027")
+    val nio = new NioLocalFileSystem
+    nio.initialize(new java.net.URI("file:///"), conf)
+    val hadoop = FileSystem.newInstance(new java.net.URI("file:///"), conf)
+    def written(fs: FileSystem): Map[String, Set[String]] = {
+      val dir = new java.io.File(tmp(), "_date=2024-03-01")
+      val out = fs.create(new Path(new java.io.File(dir, "part").toURI))
+      try out.write(Array[Byte](1, 2, 3)) finally out.close()
+      permissions(Seq(dir))
+    }
+    try {
+      var viaNio: Map[String, Set[String]] = null
+      assert(ProcessLaunches.during { viaNio = written(nio) }.isEmpty)
+      assert(viaNio == Map(
+        "dir" -> Set("rwxr-x---"), "data" -> Set("rw-r-----"), "crc" -> Set("rw-r-----")))
+      assert(viaNio == written(hadoop))
+    } finally { nio.close(); hadoop.close() }
   }
 }

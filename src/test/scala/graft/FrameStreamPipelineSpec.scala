@@ -173,10 +173,17 @@ class FrameStreamPipelineSpec extends AnyFunSuite {
     val sink = new WarehouseSink(spark, wh)
     val wm = new CdcPipeline.AckWatermark
     // three 4-frame transactions; maxFramesPerTrigger=4 makes each
-    // one flush epoch, so the checkpoint commits three times
-    PgOutputFrameLog.append(frameDir, "seg-000", (1L to 3L).flatMap(i =>
-      Seq(encodeBegin(Begin(100L * i, 0L, i)), encodeRelation(rel),
-        ins(i, s"pet$i"), encodeCommit(Commit(0, 100L * i, 100L * i + 1, 0L)))))
+    // one flush epoch, so the checkpoint commits three times. The
+    // second commits a day later than the first, so its rows open a
+    // second _date directory; the third truncates, which writes a
+    // marker table.
+    val day = 86400000000L // pg commit times are micros since 2000-01-01
+    def txn(i: Long, change: Array[Byte]) =
+      Seq(encodeBegin(Begin(100L * i, day * (i - 1), i)), encodeRelation(rel),
+        change, encodeCommit(Commit(0, 100L * i, 100L * i + 1, day * (i - 1))))
+    PgOutputFrameLog.append(frameDir, "seg-000",
+      txn(1L, ins(1L, "pet1")) ++ txn(2L, ins(2L, "pet2")) ++
+        txn(3L, encodeTruncate(Truncate(0, Seq(1L)))))
     var q: org.apache.spark.sql.streaming.StreamingQuery = null
     val launched = ProcessLaunches.during {
       q = FrameStreamPipeline.start(spark, frameDir, sink, wm, ckpt,
@@ -185,17 +192,54 @@ class FrameStreamPipelineSpec extends AnyFunSuite {
     }
     assert(q.recentProgress.count(_.numInputRows > 0) == 3)
     assert(wm.position.contains(300L))
-    // Spark's default manager runs chmod + readlink for each offsets
-    // and commits file (~20 launches per epoch without Hadoop's
-    // native library)
-    val underCheckpoint = launched.filter(c =>
-      c.endsWith(ckpt) || c.contains(ckpt + java.io.File.separator))
-    assert(underCheckpoint.isEmpty, underCheckpoint.take(5))
+    // Spark's default checkpoint manager runs chmod + readlink for
+    // each offsets and commits file (~20 launches per epoch without
+    // Hadoop's native library), and Hadoop's LocalFileSystem runs
+    // chmod for each parquet file, .crc and directory the warehouse
+    // publishes
+    assert(launched.isEmpty, launched.take(5))
     for (log <- Seq("offsets", "commits")) {
       val names = new java.io.File(ckpt, log).list().toSet
       assert(Set("0", "1", "2").subsetOf(names), s"$log: $names")
       assert(!names.exists(_.endsWith(".crc")), s"$log: $names")
     }
+    val pets = graft.model.TableSchema(1L, "public", "pets", Seq(
+      graft.model.ColumnSpec("id", PgTypes.Int8, key = true),
+      graft.model.ColumnSpec("name", PgTypes.Text)))
+    val dates = new java.io.File(sink.rawPath(pets)).list().filter(_.startsWith("_date="))
+    assert(dates.toSet == Set("_date=2000-01-01", "_date=2000-01-02"), dates.toSeq)
+    assert(sink.raw(pets).count() == 2)
+    assert(sink.latestView(pets).count() == 0)
+  }
+
+  test("flush epochs read their frames on the driver and still report their input rows") {
+    val frameDir = tmp(); val ckpt = tmp(); val wh = tmp()
+    val sink = new WarehouseSink(spark, wh)
+    val wm = new CdcPipeline.AckWatermark
+    PgOutputFrameLog.append(frameDir, "seg-000", (1L to 3L).flatMap(i =>
+      Seq(encodeBegin(Begin(100L * i, 0L, i)), encodeRelation(rel),
+        ins(i, s"pet$i"), encodeCommit(Commit(0, 100L * i, 100L * i + 1, 0L)))))
+    val listener = new graft.streaming.CdcQueryListener
+    spark.streams.addListener(listener)
+    try {
+      var q: org.apache.spark.sql.streaming.StreamingQuery = null
+      val started = SparkJobs.groupsDuring(spark.sparkContext) {
+        q = FrameStreamPipeline.start(spark, frameDir, sink, wm, ckpt,
+          "100 milliseconds", maxFramesPerTrigger = Some(4L))
+        try q.processAllAvailable() finally q.stop()
+      }
+      // the only job is SparkJobs' own probe, started after the query
+      // stopped; collecting each epoch's frames would start three more
+      assert(started.size == 1, started)
+      assert(q.recentProgress.map(_.numInputRows).toSeq == Seq(4L, 4L, 4L))
+      assert(wm.position.contains(300L))
+      // progress events reach listeners asynchronously
+      val deadline = System.currentTimeMillis() + 10000
+      def stats = listener.statsOf(q.name)
+      while (stats.forall(_.batches < 3) && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(stats.map(s => (s.batches, s.rows)).contains((3L, 12L)), stats)
+    } finally spark.streams.removeListener(listener)
   }
 
   test("a truncate-only transaction still advances the ack watermark") {
